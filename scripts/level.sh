@@ -15,4 +15,4 @@ OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens 
 # driver's own processes sit on low core ids
 NP=$(nproc); FIRST=$((NP - CORES)); LAST=$((NP - 1))
 taskset -c $FIRST-$LAST java $OPENS -Xmx8g -Dspark.ui.enabled=false "$@" \
-  -cp "$CP" graft.tools.PipelineLevel $CORES $DOCS 10000 $REPS 2>&1 | grep -E "GRAFT_LEVEL|\[stage\]|\[sub\]"
+  -cp "$CP" graft.tools.PipelineLevel $CORES $DOCS 10000 $REPS 2>&1 | grep GRAFT_LEVEL

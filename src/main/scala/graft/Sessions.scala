@@ -13,7 +13,7 @@ object Sessions {
   def tune(b: SparkSession.Builder, cores: Int, appName: String): SparkSession.Builder =
     b.appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -21,13 +21,11 @@ object Sessions {
       // task CPU for ~2× smaller files is the right default, and it keeps
       // the write path CPU-dense (scales with cores, unlike kernel page
       // traffic)
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_PARQUET_CODEC", "zstd"))
+      .config("spark.sql.parquet.compression.codec", "zstd")
       // dynamic-partition writes keep Spark's sort-based writer: measured
       // A/B (2M docs, pinned 4 CPUs) shows 32 concurrent zstd writers per
       // task are SLOWER than one int-keyed sort + sequential writers
-      .config("spark.sql.maxConcurrentOutputFileWriters",
-        sys.env.getOrElse("GRAFT_CONC_WRITERS", "0"))
+      .config("spark.sql.maxConcurrentOutputFileWriters", "0")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
       // shuffle/spill on tmpfs when present — a single local disk does not

@@ -17,21 +17,17 @@ import org.apache.spark.sql.{DataFrame, Row}
  */
 private[graft] object Jobs {
 
-  /** Union `parts` into jobs of ≤ `chunk` plans and collect all jobs,
-    * up to `parallelism` in flight. Returns all rows (order unspecified
-    * across chunks — callers key on embedded ids). */
-  /** In-flight chunk jobs (1 = serial); env-tunable. Default 2: the
-    * driver plans one chunk while another executes. Higher values showed
-    * no win at local[32] (each chunk job already saturates the cores —
-    * A/B at sf0.1 was within ambient noise, worst case 40% slower under
-    * contention); on a multi-executor cluster with scheduler slack,
-    * raise via GRAFT_JOB_PARALLELISM. */
-  val DefaultParallelism: Int =
-    sys.env.getOrElse("GRAFT_JOB_PARALLELISM", "2").toInt
+  /** In-flight chunk jobs. 2: the driver plans one chunk while another
+    * executes. Higher values showed no win at local[32] (each chunk job
+    * already saturates the cores — A/B at sf0.1 was within ambient noise,
+    * worst case 40% slower under contention). */
+  val DefaultParallelism = 2
 
-  def collectChunked(parts: Seq[DataFrame], chunk: Int,
-      parallelism: Int = DefaultParallelism): Seq[Row] =
-    collectPools(Seq((parts, chunk)), parallelism).head
+  /** Union `parts` into jobs of ≤ `chunk` plans and collect all jobs,
+    * up to [[DefaultParallelism]] in flight. Returns all rows (order
+    * unspecified across chunks — callers key on embedded ids). */
+  def collectChunked(parts: Seq[DataFrame], chunk: Int): Seq[Row] =
+    collectPools(Seq((parts, chunk))).head
 
   /** Run SEVERAL independent part-pools through ONE shared concurrent
     * chunk executor and return each pool's rows separately. Chunking
@@ -41,36 +37,27 @@ private[graft] object Jobs {
     * miner runs up to five independent pools per level (fused scoring,
     * lazy/fallback counts, head sizes, refinement templates,
     * instantiations). */
-  def collectPools(pools: Seq[(Seq[DataFrame], Int)],
-      parallelism: Int = DefaultParallelism): IndexedSeq[Seq[Row]] = {
+  def collectPools(pools: Seq[(Seq[DataFrame], Int)]): IndexedSeq[Seq[Row]] = {
     val chunks = pools.zipWithIndex.flatMap { case ((parts, chunk), pi) =>
       parts.grouped(chunk).map(c => (pi, c))
     }
     val out = Array.fill(pools.size)(Seq.newBuilder[Row])
     if (chunks.isEmpty) return out.map(_.result()).toIndexedSeq
-    if (chunks.size == 1 || parallelism <= 1) {
-      chunks.foreach { case (pi, c) =>
-        out(pi) ++= c.reduce(_ union _).collect()
-      }
+    if (chunks.size == 1) {
+      val (pi, c) = chunks.head
+      out(pi) ++= c.reduce(_ union _).collect()
       return out.map(_.result()).toIndexedSeq
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, chunks.size),
+      math.min(DefaultParallelism, chunks.size),
       (r: Runnable) => {
         val t = new Thread(r, "graft-jobs"); t.setDaemon(true); t
       })
     try {
       import scala.jdk.CollectionConverters._
-      val timing = sys.env.contains("GRAFT_MINE_TIMING")
       val tasks = chunks.map { case (pi, c) =>
         new java.util.concurrent.Callable[(Int, Seq[Row])] {
-          def call(): (Int, Seq[Row]) = {
-            val t0   = System.nanoTime()
-            val rows = c.reduce(_ union _).collect().toSeq
-            if (timing) System.err.println(
-              f"[jobs]   pool $pi chunk of ${c.size}%2d plans ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-            (pi, rows)
-          }
+          def call(): (Int, Seq[Row]) = (pi, c.reduce(_ union _).collect().toSeq)
         }
       }
       pool.invokeAll(tasks.asJava).asScala.foreach { f =>

@@ -278,11 +278,8 @@ object QueryBuilder {
   }
 
   /** Broadcast-hint ceiling, in estimated rows (~10-20 MB of triple-ish
-    * strings — the standard broadcast envelope). Env-tunable for clusters
-    * with bigger driver/executor headroom. */
-  private[graft] val BroadcastMaxRows: Double =
-    scala.util.Try(sys.env("GRAFT_BROADCAST_MAX_ROWS").toDouble)
-      .filter(_ > 0).getOrElse(250000.0)
+    * strings — the standard broadcast envelope). */
+  private[graft] val BroadcastMaxRows: Double = 250000.0
 
   /** A join is "high fan-out" when its estimated output is ≥ this factor
     * above both inputs; the stream side then gets repartitioned (iff

@@ -165,8 +165,7 @@ object Taxonomy {
     * schema layer is NOT vocabulary-sized falls back to the distributed
     * closure path. Schema facts are class/relation-level statements, so
     * real KBs sit orders of magnitude under this. */
-  private val SchemaCollectCap =
-    sys.env.getOrElse("GRAFT_SCHEMA_COLLECT_MAX", "2000000").toInt
+  private val SchemaCollectCap = 2000000
 
   /** ALL schema facts (domain, range, subProperty, subClass) in ONE
     * capped driver job — replaces the r5 cascade of 3 collects + a

@@ -164,38 +164,9 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
   }
 
   /** Score a batch of closed rules in a handful of chunked jobs. */
-  def scoreAll(rules: Seq[Rule]): Seq[ScoredRule] =
-    scoreAll(rules, _.headVars, None)
-
-  /**
-   * Bias-aware batch scoring.
-   *
-   * @param countVarsOf support/denominator counting variables per rule
-   *                    (the bias's choice — [[MiningBias.countVars]])
-   * @param lazyCfg     early-stop denominators (`lazy` bias,
-   *                    LazyMiningAssistant.java:40-88): (known support by
-   *                    rule index, minStdConfidence, minPcaConfidence).
-   *                    Denominator counts are bounded at
-   *                    `ceil(support/minConf)+1`; a truncated count can
-   *                    only land the confidence below its threshold, so
-   *                    emitted rules keep exact metrics.
-   */
-  def scoreAll(
-      rules: Seq[Rule],
-      countVarsOf: Rule => Seq[Var],
-      lazyCfg: Option[(Int => Option[Long], Double, Double)]): Seq[ScoredRule] =
-    scoreAll(rules, countVarsOf, lazyCfg, MiningBias.Default)
-
-  /** As above, with the bias's count constraints (support-only extra
-    * atoms), output-rule acceptance and supportRatio denominator applied
-    * — the seeds-count / existential assistant surface. */
-  def scoreAll(
-      rules: Seq[Rule],
-      countVarsOf: Rule => Seq[Var],
-      lazyCfg: Option[(Int => Option[Long], Double, Double)],
-      bias: MiningBias): Seq[ScoredRule] = {
+  def scoreAll(rules: Seq[Rule]): Seq[ScoredRule] = {
     if (rules.isEmpty) return Nil
-    val p = planScoring(rules, countVarsOf, lazyCfg, bias)
+    val p = planScoring(rules, _.headVars, None, MiningBias.Default)
     p.finish(Jobs.collectPools(p.pools))
   }
 
@@ -208,6 +179,20 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
    * level into one shared [[Jobs.collectPools]] submission — the
    * phase-A/phase-B jobs are independent, and a barrier between them
    * costs a full job wave of scheduling latency per level.
+   *
+   * @param countVarsOf support/denominator counting variables per rule
+   *                    (the bias's choice — [[MiningBias.countVars]])
+   * @param lazyCfg     early-stop denominators (`lazy` bias,
+   *                    LazyMiningAssistant.java:40-88): (known support by
+   *                    rule index, minStdConfidence, minPcaConfidence).
+   *                    Denominator counts are bounded at
+   *                    `ceil(support/minConf)+1`; a truncated count can
+   *                    only land the confidence below its threshold, so
+   *                    emitted rules keep exact metrics.
+   * @param bias        the bias's count constraints (support-only extra
+   *                    atoms), output-rule acceptance and supportRatio
+   *                    denominator — the seeds-count / existential
+   *                    assistant surface.
    */
   private[mine] def planScoring(
       rules: Seq[Rule],

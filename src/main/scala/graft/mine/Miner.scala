@@ -241,15 +241,6 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     out.toSeq
   }
 
-  private def phaseTimed[A](what: => String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_MINE_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val a  = f
-      System.err.println(f"[mine] $what%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      a
-    }
-
   /** Mine and return all output rules, deterministically ordered.
     * Releases the Miner's cached state on return (see [[close]]). */
   def mine(): Seq[ScoredRule] = try mineImpl() finally close()
@@ -258,7 +249,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     val seen   = scala.collection.mutable.Set[String]()
     val output = scala.collection.mutable.ArrayBuffer[ScoredRule]()
     var level  = seeds
-    seeds.foreach(n => seen += n.rule.canonical)
+    level.foreach(n => seen += n.rule.canonical)
 
     while (level.nonEmpty) {
       // ---- Phase A: score closed rules of this generation ----
@@ -321,9 +312,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
       val scoringPlan = metrics.planScoring(scoreRules, countVarsOf, lazyCfg, bias)
       val candidates  = level.filter(_.rule.length < config.maxDepth)
       val refinePlan  = planRefine(candidates)
-      val pooled = phaseTimed(
-        s"level jobs (${scoreRules.size} scored, ${candidates.size} refined)")(
-        Jobs.collectPools(scoringPlan.pools ++ refinePlan.pools))
+      val pooled = Jobs.collectPools(scoringPlan.pools ++ refinePlan.pools)
       val scoredSeq = scoringPlan.finish(pooled.take(scoringPlan.pools.size))
       val scored: Map[String, ScoredRule] =
         kept.zip(scoredSeq).map { case ((n, _, pcaUB, est), s) =>
@@ -364,9 +353,8 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         val openHead = n.rule.openVars.exists(v => n.rule.headVars.contains(v))
         openHead || scored.get(n.rule.canonical).forall(_.pcaConfidence < 1.0)
       }
-      val children = phaseTimed(s"finish refine ${candidates.size} rules")(
-        finishRefine(refinePlan, pooled.drop(scoringPlan.pools.size),
-          refinable, outputConf.toMap))
+      val children = finishRefine(refinePlan, pooled.drop(scoringPlan.pools.size),
+        refinable, outputConf.toMap)
       // The same canonical child can be generated by several parents in
       // one level (e.g. h⇐b1∧b2 from both h⇐b1 and h⇐b2), with different
       // skyline floors. The reference rejects a rule if ANY output
@@ -809,22 +797,11 @@ object Miner {
   /** Body-estimate ceiling for the merged one-plan-per-rule candidate
     * counting: above it, materializing the body without the template atom
     * risks the hub-shaped cross-section blow-up, so each template gets
-    * its own compiler-ordered plan instead. Env-tunable. */
-  val MergeBodyMaxRows: Double =
-    sys.env.get("GRAFT_MERGE_BODY_MAX_ROWS")
-      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
-      .filter(_ > 0)
-      .getOrElse(2e6)
+    * its own compiler-ordered plan instead. */
+  val MergeBodyMaxRows: Double = 2e6
 
   /** Candidate-counting templates per chunk job. Measured A/B at sf0.1
     * (round 3, stats-ordered plans): 12 beats 24 and 48 — smaller chunks
-    * plan faster and overlap better under the concurrent job pool.
-    * Env-tunable for A/B on other KBs; malformed or non-positive values
-    * fall back to the measured default instead of surfacing as an
-    * ExceptionInInitializerError on first Miner use. */
-  val TemplateChunk: Int =
-    sys.env.get("GRAFT_TEMPLATE_CHUNK")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(12)
+    * plan faster and overlap better under the concurrent job pool. */
+  val TemplateChunk = 12
 }

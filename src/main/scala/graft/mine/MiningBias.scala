@@ -279,7 +279,7 @@ object MiningBias {
    * variable is constrained only by the head atom, so it cannot appear
    * in a body-only count (the reference hits the same shape as an
    * UnsupportedOperationException fallback; here it is handled
-   * explicitly in Metrics.scoreAll).
+   * explicitly in Metrics.planScoring).
    */
   case object Existential extends MiningBias {
     def countVars(metrics: Metrics, r: Rule): Seq[Var] = r.headVars

@@ -34,51 +34,18 @@ import org.apache.spark.sql.functions._
 final class Pipeline(
     spark: SparkSession,
     val workDir: String,
-    nBuckets: Int = 32,
-    saltBits: Int = 3) {
+    nBuckets: Int = 32) {
 
   var runsExecuted: List[String] = Nil
   var runsSkipped: List[String]  = Nil
 
   private def stageDir(name: String) = s"$workDir/$name"
 
-  // Manifest writes (footer reads + JSON) are driver-only metadata work —
-  // they overlap the NEXT stage's compute instead of serializing after
-  // each write job. Crash-safety is unchanged: a stage missing its
-  // manifest simply recomputes on restart (deterministically), and a
-  // single-thread pool keeps manifest writes ordered. run() awaits all
-  // pending manifests before returning.
-  private val manifestPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => { val t = new Thread(r, "graft-manifest"); t.setDaemon(true); t })
-  private val pendingManifests =
-    scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
-
-  private def awaitManifests(): Unit = synchronized {
-    pendingManifests.foreach(_.get())
-    pendingManifests.clear()
-  }
-
   /** Run one resumable stage: skip when a complete manifest matches the
-    * input fingerprint, else compute → write parquet → write manifest. */
-  def stage(name: String, inputFp: String, partitionCols: Seq[String] = Nil)(
-      compute: => DataFrame): DataFrame = {
-    val t0  = System.nanoTime()
-    val out = stageImpl(name, inputFp, partitionCols)(compute)
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      System.err.println(f"[stage] $name%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    out
-  }
-
-  private def subTimed[A](what: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_STAGE_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val a  = f
-      System.err.println(f"[sub]   $what%-14s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      a
-    }
-
-  private def stageImpl(name: String, inputFp0: String, partitionCols: Seq[String])(
+    * input fingerprint, else compute → write parquet → hand the manifest
+    * write to `submitManifest`. */
+  private def stage(name: String, inputFp0: String,
+      submitManifest: Runnable => Unit, partitionCols: Seq[String] = Nil)(
       compute: => DataFrame): DataFrame = {
     // the fingerprint carries the on-disk LAYOUT version alongside the
     // input identity: a workDir written by an older stage layout (e.g.
@@ -101,26 +68,18 @@ final class Pipeline(
           bit_xor(xxhash64(df.columns.map(col).toSeq: _*)), lit(0L))
         val w = df.observe(obs, count(lit(1)).as("rows"), hashCol.as("checksum"))
           .write.mode("overwrite")
-        subTimed(s"$name:write") {
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(dir)
-        }
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(dir)
         val rows     = obs.get("rows").asInstanceOf[Long]
         val checksum = obs.get("checksum").asInstanceOf[Long]
         val hconf    = spark.sparkContext.hadoopConfiguration
-        synchronized {
-          pendingManifests += manifestPool.submit(new Runnable {
-            def run(): Unit = subTimed(s"$name:manifest") {
-              Manifest.write(dir, StageManifest(
-                stage = name,
-                inputFingerprint = inputFp,
-                totalRows = rows,
-                globalChecksum = checksum,
-                partitions = Manifest.footerStats(dir, hconf),
-                complete = true))
-            }
-          })
-        }
+        submitManifest(() => Manifest.write(dir, StageManifest(
+          stage = name,
+          inputFingerprint = inputFp,
+          totalRows = rows,
+          globalChecksum = checksum,
+          partitions = Manifest.footerStats(dir, hconf),
+          complete = true)))
         spark.read.parquet(dir)
     }
   }
@@ -135,20 +94,30 @@ final class Pipeline(
    *                sane choice (Iceberg snapshot-id semantics).
    */
   def run(docs: Dataset[Doc], inputFp: Option[String] = None): DataFrame = {
-    // a prior failed run on the same workDir may have left a manifest
-    // task pending against a stage dir this run is about to overwrite —
-    // drain it first so the stale footer read can't race the recompute,
-    // and always drain on exit (even a failing one) for the same reason
-    awaitManifests()
-    try runImpl(docs, inputFp)
-    finally awaitManifests()
+    // Manifest writes (footer reads + JSON) are driver-only metadata work —
+    // they overlap the NEXT stage's compute instead of serializing after
+    // each write job. Crash-safety is unchanged: a stage missing its
+    // manifest simply recomputes on restart (deterministically), and a
+    // single-thread pool keeps manifest writes ordered. The pool lives for
+    // one run and is drained on every exit, a failing one included, so no
+    // manifest task outlives the run that wrote its stage.
+    val manifestPool = java.util.concurrent.Executors.newSingleThreadExecutor(
+      (r: Runnable) => { val t = new Thread(r, "graft-manifest"); t.setDaemon(true); t })
+    val pending = scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
+    try runImpl(docs, inputFp, task => pending += manifestPool.submit(task))
+    finally {
+      manifestPool.shutdown()
+      manifestPool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      pending.foreach(_.get()) // rethrows a failed manifest write
+    }
   }
 
-  private def runImpl(docs: Dataset[Doc], inputFp: Option[String]): DataFrame = {
+  private def runImpl(docs: Dataset[Doc], inputFp: Option[String],
+      submitManifest: Runnable => Unit): DataFrame = {
     val docsDF = docs.toDF()
     val docsFp = inputFp.getOrElse(Manifest.fingerprint(docsDF.select("doc_id")))
 
-    val mentions = stage("mentions", docsFp)(MentionDetect.mentions(docsDF))
+    val mentions = stage("mentions", docsFp, submitManifest)(MentionDetect.mentions(docsDF))
 
     // downstream stages are deterministic functions of the docs input, so
     // the docs fingerprint + a stage tag is their resume identity — no
@@ -163,7 +132,7 @@ final class Pipeline(
     // three: each extra vocabulary-sized stage costs fixed write+manifest
     // +read latency that does not shrink with cores.
     val aliasFp   = docsFp + "|aliases"
-    val aliasDict = stage("alias_map", aliasFp) {
+    val aliasDict = stage("alias_map", aliasFp, submitManifest) {
       LinkScore.aliasDictionary(
         LinkScore.bestCandidates(Canonicalize.aliasMap(mentions)))
     }
@@ -171,7 +140,8 @@ final class Pipeline(
     // link scoring is fused into the materialize stage: the linked stream
     // is cheap to recompute from (mentions, alias_map) — persisting it
     // would double the heaviest I/O for no resume value
-    val out = stage("triples", docsFp + "|" + aliasFp, partitionCols = Seq("bucket")) {
+    val out = stage("triples", docsFp + "|" + aliasFp, submitManifest,
+        partitionCols = Seq("bucket")) {
       // The materialize exchange is the pipeline's dominant shuffle and
       // this VM (like any node) is bandwidth-bound on row churn: subject
       // and object ship as dictionary-encoded LONGS (bucket/salt computed
@@ -190,7 +160,7 @@ final class Pipeline(
         .select(col("doc_id").as("src_doc"), col("span_idx").as("src_span"),
           col("subj_id"), col("pred"), col("obj_id"), col("bucket"))
         .repartition(col("bucket"),
-          pmod(xxhash64(col("src_doc"), col("src_span")), lit(1 << saltBits)))
+          pmod(xxhash64(col("src_doc"), col("src_span")), lit(1 << Pipeline.SaltBits)))
         .sortWithinPartitions("bucket")
     }
     out
@@ -245,8 +215,10 @@ object Pipeline {
     * executor/driver budget, far above `autoBroadcastJoinThreshold`'s
     * conservative 10 MB default — when the alternative is shuffling a
     * 10¹²-row mention stream, forcing the broadcast is right for every
-    * dictionary that plausibly fits. Override: GRAFT_DICT_BROADCAST_MAX_BYTES. */
-  val DictBroadcastMaxBytes: Long =
-    sys.env.get("GRAFT_DICT_BROADCAST_MAX_BYTES").map(_.toLong)
-      .getOrElse(256L << 20)
+    * dictionary that plausibly fits. */
+  val DictBroadcastMaxBytes: Long = 256L << 20
+
+  /** log2 of the salt fan-out per bucket in the materialize shuffle:
+    * each subject-hash bucket spreads over 2^SaltBits write tasks. */
+  val SaltBits = 3
 }

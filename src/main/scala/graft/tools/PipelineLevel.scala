@@ -21,19 +21,6 @@ object PipelineLevel {
     val Array(cores, nDocs, nEntities, reps) = args.map(_.toLong)
     val spark = Sessions.local(cores.toInt, s"graft-level-$cores")
     spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.contains("GRAFT_JOB_TIMING")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private var lastEnd = 0L
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val gap = if (lastEnd == 0) 0 else j.time - lastEnd
-          System.err.println(s"[job] start ${j.jobId} gap=${gap}ms")
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          lastEnd = j.time
-          System.err.println(s"[job] end   ${j.jobId}")
-        }
-      })
-    }
     val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(base), s"graft-level$cores").toString
@@ -43,19 +30,8 @@ object PipelineLevel {
           inputFp = Some("warmup"))
         .count()
       var triples = 0L
-      val stageTiming = sys.env.contains("GRAFT_STAGE_TIMING")
-      // process-CPU sampling is only needed for the opt-in timing output,
-      // and the com.sun.management extension is not guaranteed — look it
-      // up lazily and degrade to wall-only output when absent
-      val cpuTime: () => Long =
-        if (!stageTiming) () => 0L
-        else java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-          case b: com.sun.management.OperatingSystemMXBean => () => b.getProcessCpuTime
-          case _ => () => -1L
-        }
       val secs = (1 to reps.toInt).map { r =>
         val t0 = System.nanoTime()
-        val c0 = cpuTime()
         new Pipeline(spark, s"$dir/main$r", nBuckets = 32)
           .run(Corpus.generate(spark, nDocs, nEntities.toInt),
             inputFp = Some(s"corpus:42:$nDocs:$nEntities"))
@@ -63,13 +39,7 @@ object PipelineLevel {
         // DURING the write job by observe() — a count() here would be a
         // redundant extra job inside the timed window
         triples = graft.pipeline.Manifest.read(s"$dir/main$r/triples").get.totalRows
-        val wall = (System.nanoTime() - t0) / 1e9
-        if (stageTiming) {
-          val c1 = cpuTime()
-          val cpu = if (c0 < 0 || c1 < 0) "n/a" else f"${(c1 - c0) / 1e9}%.2f"
-          System.err.println(f"[rep] $r wall=$wall%.2f cpu=$cpu")
-        }
-        wall
+        (System.nanoTime() - t0) / 1e9
       }
       println(f"GRAFT_LEVEL cores=$cores triples=$triples bestSec=${secs.min}%.3f")
     } finally {

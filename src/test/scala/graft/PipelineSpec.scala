@@ -154,6 +154,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(p3.runsExecuted == List("triples"))
   }
 
+  test("a finished run leaves no manifest-writer thread alive") {
+    val dir = Files.createTempDirectory("graft-threads").toString
+    new Pipeline(spark, dir, nBuckets = 4).run(Corpus.generate(spark, 100, V))
+    import scala.jdk.CollectionConverters._
+    val writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "graft-manifest").toSeq
+    // a terminated pool's worker may still be unwinding; an idle one never exits
+    writers.foreach(_.join(5000))
+    assert(writers.forall(!_.isAlive), s"${writers.count(_.isAlive)} live graft-manifest threads")
+  }
+
   test("salted materialize spreads a pathological head entity across write tasks") {
     // 90% of all mentions share ONE subject — the skew shape the north
     // rule requires the pipeline to survive. The storage layout is
