@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.plans.ConnectedComponents
+import graft.plans.{ConnectedComponents, DriverRegime}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,21 +22,6 @@ import org.apache.spark.sql.functions._
  */
 object Canonicalize {
 
-  /** `a < b` under unsigned UTF-8 byte ordering — the comparison
-    * `min("src")` uses in the distributed path (UTF8String.compareTo). */
-  private[pipeline] def utf8Lt(a: String, b: String): Boolean = {
-    val (x, y) = (a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                  b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** distinct aliases → blocking-key edges. One scan of the mention
     * stream (explode both sides in place), not one per side. */
   def aliasKeyEdges(mentions: DataFrame): DataFrame = {
@@ -52,11 +37,13 @@ object Canonicalize {
 
   /**
    * alias → canonical-entity map. Scale-adaptive, mirroring
-   * [[ConnectedComponents.run]]'s two regimes:
+   * [[ConnectedComponents.run]]'s two regimes, picked by one bounded
+   * probe of the distinct aliases (`limit(driverThreshold + 1).collect()`:
+   * at most `driverThreshold + 1` rows ever reach the driver):
    *
-   * - vocabulary ≤ `driverThreshold`: ONE data-sized job extracts the
-   *   distinct aliases, then blocking-key union-find runs on the driver
-   *   (the distinct-alias set is vocabulary-sized by construction — the
+   * - vocabulary ≤ `driverThreshold`: the probe already holds every
+   *   distinct alias, and blocking-key union-find runs on the driver (the
+   *   distinct-alias set is vocabulary-sized by construction — the
    *   distributed pipeline below would spend ~20 sub-second shuffle jobs
    *   on a 30k-row graph, and per-job scheduling latency does not shrink
    *   with cores);
@@ -65,16 +52,17 @@ object Canonicalize {
    *   alias→representative edges (removes the key nodes, halves the
    *   graph, cuts the diameter), then the large-star/small-star CC loop.
    *   Connectivity is preserved exactly: two aliases share a key iff
-   *   both link to that key's rep.
+   *   both link to that key's rep. This branch reads the mentions again,
+   *   not the probe, so the probe is its only extra pass.
    */
-  def aliasMap(mentions: DataFrame, driverThreshold: Int = 1 << 20): DataFrame = {
+  def aliasMap(mentions: DataFrame, driverThreshold: Int = DriverRegime.Ceiling): DataFrame = {
     val spark = mentions.sparkSession
-    val aliases = mentions
+    val probe = mentions
       .select(explode(array(col("subj_alias"), col("obj_alias"))).as("alias"))
-      .distinct().localCheckpoint(true)
-    if (aliases.count() <= driverThreshold) {
+      .distinct().limit(driverThreshold + 1).collect()
+    if (probe.length <= driverThreshold) {
       import spark.implicits._
-      val arr = aliases.collect().map(_.getString(0))
+      val arr = probe.map(_.getString(0))
       // union-find keyed by the same two blocking keys as the
       // distributed path; result is order-independent (component
       // canonical = min alias of the final component).
@@ -106,7 +94,7 @@ object Canonicalize {
         }
       }
       val canonical = arr.groupBy(find).map { case (root, members) =>
-        root -> members.reduce((x, y) => if (utf8Lt(x, y)) x else y)
+        root -> members.reduce((x, y) => if (DriverRegime.utf8Lt(x, y)) x else y)
       }
       spark.createDataset(arr.toIndexedSeq.map(a => (a, canonical(find(a)))))
         .toDF("alias", "canonical")

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.plans.DriverRegime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,10 +54,11 @@ object LinkScore {
   }
 
   /** Canonical entity → dense id (1-based sorted rank; sorted-order ids
-    * make encode and decode deterministic under any partitioning). At
-    * 10¹² docs the canonical-entity vocabulary is itself billions of
-    * rows, so the rank rides [[graft.kb.Dictionary.sortedRanks]] —
-    * bounded window partitions, output-identical to the naive global
+    * make encode and decode deterministic under any partitioning). This
+    * is the distributed regime of [[aliasDictionary]]: at 10¹² docs the
+    * canonical-entity vocabulary is itself billions of rows, so the rank
+    * rides [[graft.kb.Dictionary.sortedRanks]] — bounded window
+    * partitions, output-identical to the naive global
     * `row_number() OVER (ORDER BY canonical)` an oracle checks with.
     * Takes the already-computed best-candidate table so the top-1
     * reduction runs once per stage, not once per consumer. */
@@ -71,10 +73,40 @@ object LinkScore {
    * string forms live ONLY in this vocabulary-sized dictionary, never in
    * the fact rows). One row per alias; `select(entity_id, canonical)
    * .distinct()` is the decode side.
+   *
+   * `best` is materialized once and probed with one bounded collect
+   * (`limit(Ceiling + 1)`), which picks one of two regimes with the same
+   * output:
+   * - at most [[graft.plans.DriverRegime.Ceiling]] aliases: the driver
+   *   sorts the distinct canonicals in Spark's binary UTF-8 order (the
+   *   order of `row_number() OVER (ORDER BY canonical)`), ranks them from
+   *   1 and returns the catalog as a ONE-partition local DataFrame — one
+   *   write task and one parquet file, so every later read of the catalog
+   *   (each decode join of a query) is one scan task, not one per
+   *   default-parallelism slice;
+   * - above it: [[entityDictionary]] over the materialized `best`, joined
+   *   back to it.
    */
   def aliasDictionary(best: DataFrame): DataFrame =
-    best.join(entityDictionary(best), "canonical")
-      .select(col("alias"), col("canonical"), col("entity_id"))
+    aliasDictionary(best, DriverRegime.Ceiling)
+
+  /** [[aliasDictionary]] with the regime ceiling as a parameter, so tests
+    * can force the distributed regime (`driverThreshold = 0`). */
+  private[pipeline] def aliasDictionary(best: DataFrame, driverThreshold: Int): DataFrame = {
+    val pairs = best.select(col("alias"), col("canonical")).localCheckpoint(true)
+    val probe = pairs.limit(driverThreshold + 1).collect()
+    if (probe.length <= driverThreshold) {
+      val spark = best.sparkSession
+      import spark.implicits._
+      val ids = DriverRegime.sortUtf8(probe.map(_.getString(1)).distinct)
+        .iterator.zipWithIndex.map { case (c, i) => c -> (i + 1L) }.toMap
+      probe.toSeq.map { r => (r.getString(0), r.getString(1), ids(r.getString(1))) }
+        .toDF("alias", "canonical", "entity_id")
+        .coalesce(1)
+    } else
+      pairs.join(entityDictionary(pairs), "canonical")
+        .select(col("alias"), col("canonical"), col("entity_id"))
+  }
 
   /**
    * [[link]] with subject/object DICTIONARY-ENCODED to longs (subject

@@ -130,7 +130,12 @@ final class Pipeline(
     // (the only sane layout at 10¹² docs — AMIE's own KB is int-encoded),
     // so the decode catalog must survive with the table. One stage, not
     // three: each extra vocabulary-sized stage costs fixed write+manifest
-    // +read latency that does not shrink with cores.
+    // +read latency that does not shrink with cores. Canonicalization and
+    // id assignment each pick a regime from one bounded probe of their
+    // input: up to DriverRegime.Ceiling rows they finish on the driver
+    // (union-find; sorted ranks) and the catalog is written as ONE
+    // parquet file, above it they run as distributed rounds (star CC;
+    // Dictionary.sortedRanks). Same rows and ids either way.
     val aliasFp   = docsFp + "|aliases"
     val aliasDict = stage("alias_map", aliasFp, submitManifest) {
       LinkScore.aliasDictionary(

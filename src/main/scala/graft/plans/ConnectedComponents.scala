@@ -30,9 +30,11 @@ object ConnectedComponents {
    *        the corpus — so in practice this path serves anything below
    *        ~10⁶ edges and the star rounds serve web-scale vocabularies.
    * @return DataFrame (id, component) covering every node appearing in
-   *         `edges`; `component` = lexicographically-minimal reachable id.
+   *         `edges`; `component` = minimal reachable id in Spark's binary
+   *         (UTF-8 byte) string order, in both regimes.
    */
-  def run(edges: DataFrame, maxIter: Int = 25, driverThreshold: Long = 1L << 20): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 25,
+      driverThreshold: Long = DriverRegime.Ceiling): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -111,7 +113,8 @@ object ConnectedComponents {
   }
 
   /** Driver-side union-find with path compression + union-by-min — the
-    * small-graph fast path (same contract as the distributed rounds). */
+    * small-graph fast path (same contract as the distributed rounds, so
+    * "min" is Spark's UTF-8 byte order, the order `least`/`min` use). */
   private def runOnDriver(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -126,7 +129,7 @@ object ConnectedComponents {
     }
     es.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (DriverRegime.utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val nodes = es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
     nodes.iterator.map(n => (n, find(n))).toSeq.toDF("id", "component")

@@ -74,8 +74,10 @@ class PipelineSpec extends AnyFunSuite {
 
   test("connected components: driver and distributed paths agree") {
     val rng = new scala.util.Random(7)
-    val edges = (1 to 300).map(_ => (s"v${rng.nextInt(120)}", s"v${rng.nextInt(120)}"))
-      .filter { case (a, b) => a != b }.toDF("src", "dst")
+    // U+FFFF vs U+1F600: UTF-16 code-unit order and Spark's UTF-8 byte
+    // order (the distributed rounds' least/min) pick different roots
+    val edges = ((1 to 300).map(_ => (s"v${rng.nextInt(120)}", s"v${rng.nextInt(120)}"))
+      .filter { case (a, b) => a != b } :+ ("\uFFFF", "\uD83D\uDE00")).toDF("src", "dst")
     val drv = ConnectedComponents.run(edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val dist = ConnectedComponents.run(edges, driverThreshold = 0).collect()
