@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 /**
  * What the vocabulary-sized stages (alias union-find, connected
- * components, entity-id ranks) share when they run on the driver instead
+ * components, entity-id ranks, the decode catalog of
+ * `Pipeline.materialized`) share when they run on the driver instead
  * of as distributed rounds: the size ceiling that picks the regime, and
  * the string order. Both regimes must label and rank identically, so the
  * driver side compares strings the way Spark does — unsigned UTF-8 bytes

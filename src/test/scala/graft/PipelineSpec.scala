@@ -156,6 +156,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(p3.runsExecuted == List("triples"))
   }
 
+  test("resume key covers doc content: an edited span under the same doc_id recomputes") {
+    val docs = Corpus.generate(spark, 200, V).collect().toSeq
+    val dir  = Files.createTempDirectory("graft-resume-edit").toString
+    new Pipeline(spark, dir, nBuckets = 4).run(spark.createDataset(docs))
+    // rewrite the first text span of one doc, keeping every doc_id
+    val at = docs.indexWhere(_.spans.exists(_.kind == "text"))
+    val k  = docs(at).spans.indexWhere(_.kind == "text")
+    val edited = docs.updated(at, docs(at).copy(spans =
+      docs(at).spans.updated(k, docs(at).spans(k).copy(text = Some("e_3 worksAt E_4.")))))
+    val p = new Pipeline(spark, dir, nBuckets = 4)
+    p.run(spark.createDataset(edited))
+    assert(p.runsExecuted.toSet == Set("mentions", "alias_map", "triples"))
+    val got = p.triples().collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+    assert(got == edited.flatMap(Corpus.oracleTriples).sorted)
+  }
+
   test("a finished run leaves no manifest-writer thread alive") {
     val dir = Files.createTempDirectory("graft-threads").toString
     new Pipeline(spark, dir, nBuckets = 4).run(Corpus.generate(spark, 100, V))

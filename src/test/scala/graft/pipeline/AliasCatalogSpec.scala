@@ -1,12 +1,9 @@
 package graft.pipeline
 
-import graft.SparkTestSession
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCounter, SparkTestSession}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The alias_map stage (alias union-find → best candidates → entity ids):
   * the driver and distributed regimes agree, and the driver regime stays
@@ -39,25 +36,11 @@ class AliasCatalogSpec extends AnyFunSuite {
     MentionDetect.mentions(Corpus.generate(spark, 2000, 200).toDF())
       .write.parquet(s"$dir/mentions")
     val mentions = spark.read.parquet(s"$dir/mentions")
-    val sc    = spark.sparkContext
-    val group = "alias-map-job-budget"
-    val jobs  = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "alias_map stage")
-    try {
+    val (_, jobs) = JobCounter(spark) {
       LinkScore.aliasDictionary(LinkScore.bestCandidates(Canonicalize.aliasMap(mentions)))
         .write.parquet(s"$dir/alias_map")
-      ListenerDrain.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get() <= 8, s"${jobs.get()} jobs")
+    assert(jobs <= 8, s"$jobs jobs")
   }
 
   test("Pipeline.run writes alias_map as one parquet file") {
