@@ -735,8 +735,8 @@ object SparkEntry {
       val kb    = tpchTriples(s, dir)
       val train = kb.where(!lpIsTest)
       val test  = kb.where(lpIsTest)
-      // the prediction table feeds 4 consumers (target-score + candidate
-      // branches × 2 directions) — materialize it once (at cluster scale
+      // the prediction table feeds 3 consumers (the shared target scores
+      // + a candidate branch per direction) — materialize it once (at cluster scale
       // this is the "write the predictions table, then rank against it"
       // two-job shape)
       val preds = RuleApply.predictions(train, lpRules).localCheckpoint()

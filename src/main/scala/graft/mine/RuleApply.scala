@@ -1,6 +1,7 @@
 package graft.mine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.kb.{Atom, Const, KGStats, QueryBuilder, Term, Var}
@@ -25,10 +26,10 @@ import graft.kb.{Atom, Const, KGStats, QueryBuilder, Term, Var}
  * variables outside the head are deduplicated BEFORE the joins — a body
  * atom used only existentially never fans the prediction set out), a
  * single union + groupBy(subj,pred,obj) shuffle to aggregate scores, and
- * count-based ranking joins keyed by the query side (subj,pred) /
- * (pred,obj) — no window over global candidate lists, so a hub object
- * with millions of candidates stays a partitioned aggregation (AQE skew
- * split applies).
+ * one ranking window for both directions, partitioned by direction and
+ * query key (subj,pred) / (pred,obj) and restricted to the tested keys —
+ * never a window over global candidate lists and never a pair set of
+ * targets × candidates (see [[filteredRanks]]).
  */
 object RuleApply {
 
@@ -102,117 +103,89 @@ object RuleApply {
    * (the filtered-ranking protocol; `known` is train ∪ valid ∪ test,
    * linkprediction.py:34-36). A target the rule set never predicted has
    * rank NULL. `preds`'s score column may be a double (max) or a
-   * descending array (maxplus) — both compare correctly.
+   * descending array (maxplus) — both compare correctly. Each test row
+   * gets one output row: a duplicated test triple is ranked once per
+   * copy, each copy with the rank of a single one.
    *
-   * Scale shape (r4 verdict "what's wrong" #2 — the candidate join was
-   * unbounded per ranking key): a hub key with millions of candidates ×
-   * many test triples on the same key is never materialized as a pair
-   * set. The candidate pool is first restricted to the test keys (a
-   * broadcast semi-join — candidates on never-tested keys cannot affect
-   * any rank). "Strictly better" counts come from a per-(key, score)
-   * HISTOGRAM of that pool — the join is test × distinct-scores-per-key,
-   * and distinct scores are bounded by the rule count (scores are rule
-   * confidences), not the candidate count. Score TIES are an order
-   * statistic over the tied set, NOT a join either (a (key, score)
-   * equi-join of tests × tied candidates is quadratic exactly when
-   * confidences collide on a hub key — few rules ⇒ few distinct scores
-   * ⇒ massive tied sets; the r5 K=10 probe measured the join form at
-   * 9.4× for 10× data, window form ~linear): candidates and test
-   * targets union into one table and a running candidate count per
-   * (key, score) partition ordered by entity id reads off
-   * #{tied candidates below each target} in linear rows and one
-   * shuffle. The window is PARTITIONED by (key, score) — the score in
-   * the partition key splits a hub key across rules' confidences — and
-   * its order is total: a candidate can never equal a test target on
-   * the same key (the candidate pool is known-free, every test target
-   * is known), two test targets with one (key, id) are one triple, and
-   * candidate (key, cand) pairs are distinct post-aggregation.
+   * Plan shape: one window, no pair set and no join-back.
+   *  - The candidate pool is restricted to the test keys first (a
+   *    broadcast semi-join of the prediction scan against the test
+   *    table's keys — candidates on never-tested keys cannot affect any
+   *    rank), and so are the known facts it is filtered against, so the
+   *    anti join never shuffles the whole KB.
+   *  - Candidates and test targets union into one table tagged
+   *    `is_cand` ∈ {1, 0}, ordered per ranking key by (score desc nulls
+   *    last, entity asc). The running sum of `is_cand` at a target row is
+   *    exactly #{strictly better} + #{tied with a smaller entity}, so
+   *    rank = 1 + that sum, read off in linear rows and one shuffle.
+   *    The order is total between candidates and targets: a candidate
+   *    never equals a target on (key, entity) because the pool is
+   *    known-free and every test target is known (and `is_cand` asc
+   *    breaks that tie regardless, so a target never counts its own
+   *    prediction). Target rows add 0 to the sum, so duplicated test rows
+   *    cannot inflate each other.
+   *
+   * Scale trade: a hub key is one window partition holding all its
+   * candidates (`WindowExec` spills past its in-memory threshold).
+   * Partitioning by (key, score) instead would split a hub key only by
+   * its number of distinct scores — at most the rule count under `max` —
+   * and would need a separate strictly-better count and join-back per
+   * direction.
    *
    * Output: (subj, pred, obj, rank).
    */
   def filteredRanks(preds: DataFrame, test: DataFrame, known: DataFrame,
-      tail: Boolean): DataFrame = {
-    val entity = if (tail) "obj" else "subj"
-    val keys   = if (tail) Seq("subj", "pred") else Seq("pred", "obj")
-    val t      = test.select(col("subj"), col("pred"), col("obj"))
-    // the target's own score; NULL = never predicted (rank stays NULL:
-    // it contributes 0 to MRR/hits, the reference evaluator's behavior
-    // for an unranked test triple)
-    val scored = t.join(preds.withColumnRenamed("conf", "tconf"),
-      Seq("subj", "pred", "obj"), "left")
-    // Only candidates on a key some TEST triple ranks against can ever
-    // reach the final joins (strict joins `ranked` ⊆ test on keys; the
-    // tie output joins back on the full test triple) — so the pool is
-    // semi-joined on the test keys FIRST. The key set is bounded by
-    // |test| and comes from the base test table (no join dependency),
-    // so the semi-join is a broadcast map-side filter over the
-    // prediction scan; the whole-pool histogram + (key, score) window
-    // this replaces measured 3× the steady time at sf0.1 with most
-    // prediction keys never tested.
-    val testKeys = broadcast(t.select(keys.map(col): _*).distinct())
-    // filtered candidate pool — known true facts never compete. (The
-    // target itself never outranks itself: its own row carries exactly
-    // tconf — excluded from the strict branch by >, from the tie branch
-    // by cand < entity.)
-    // the known-facts anti join is ALSO restricted to the test keys
-    // first: every cands row carries a test key (semi-join above), so
-    // known facts on never-tested keys cannot match — without this the
-    // anti join shuffles the ENTIRE KB per direction (at 100 TB the
-    // whole-graph shuffle; at sf0.1 a 330k-row one), for a candidate
-    // pool bounded by the test set. Result-identical.
-    val knownOnKeys = known.select("subj", "pred", "obj")
-      .join(testKeys, keys, "left_semi")
-    val cands = preds
-      .join(testKeys, keys, "left_semi")
-      .join(knownOnKeys, Seq("subj", "pred", "obj"), "left_anti")
-      .select(keys.map(col) ++
-        Seq(col(entity).as("cand"), col("conf").as("cconf")): _*)
-    val ranked = scored.where(col("tconf").isNotNull)
-    // candidates with a strictly higher score: per-key score histogram
-    val hist = cands.groupBy(keys.map(col) :+ col("cconf"): _*)
-      .agg(count(lit(1)).as("__n"))
-    val strict = ranked.join(hist, keys)
-      .where(col("cconf") > col("tconf"))
-      .groupBy("subj", "pred", "obj").agg(sum(col("__n")).as("nstrict"))
-    // score ties below the target entity: running candidate count per
-    // (key, score) partition (see the order-statistic note above). A
-    // test target's row contributes 0, so the running sum AT the target
-    // is exactly #{tied candidates with id < target id}; the test
-    // triple itself is keys ∪ {entity}, reconstructed from the window
-    // columns.
-    val tagged = cands.select(keys.map(col) ++ Seq(col("cconf").as("__sc"),
-        col("cand").as("__id"), lit(1L).as("__iscand")): _*)
-      .unionByName(ranked.select(keys.map(col) ++ Seq(col("tconf").as("__sc"),
-        col(entity).as("__id"), lit(0L).as("__iscand")): _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((keys :+ "__sc").map(col): _*).orderBy(col("__id"))
-      .rowsBetween(Long.MinValue, 0)
-    val ties = tagged
-      .withColumn("__below", sum(col("__iscand")).over(w))
-      .where(col("__iscand") === 0L && col("__below") > 0L)
-      .select(keys.map(col) ++
-        Seq(col("__id").as(entity), col("__below").as("nties")): _*)
-    // strict and ties are both ≤ |test| rows by construction (grouped /
-    // filtered onto test triples) — the same boundedness argument as the
-    // testKeys broadcast above; the hint keeps the final assembly from
-    // falling to sort-merge joins behind the checkpointed preds' unknown
-    // size stats
-    scored.join(broadcast(strict), Seq("subj", "pred", "obj"), "left")
-      .join(broadcast(ties), Seq("subj", "pred", "obj"), "left")
-      .select(col("subj"), col("pred"), col("obj"),
-        when(col("tconf").isNotNull,
-          coalesce(col("nstrict"), lit(0L)) +
-            coalesce(col("nties"), lit(0L)) + 1L).as("rank"))
-  }
+      tail: Boolean): DataFrame =
+    ranks(preds, test, known, Seq(if (tail) Tail else Head))
+      .select("subj", "pred", "obj", "rank")
 
-  /** Both-direction ranks labeled `direction` ∈ {head, tail} —
-    * the evaluator's working table. */
+  /** Both-direction ranks labeled `direction` ∈ {head, tail} — the
+    * evaluator's working table, ranked by the one window of
+    * [[filteredRanks]] partitioned by direction as well. */
   def rankedBothDirections(preds: DataFrame, test: DataFrame,
       known: DataFrame): DataFrame =
-    filteredRanks(preds, test, known, tail = true)
-      .withColumn("direction", lit("tail"))
-      .unionByName(filteredRanks(preds, test, known, tail = false)
-        .withColumn("direction", lit("head")))
+    ranks(preds, test, known, Seq(Tail, Head))
+      .select("subj", "pred", "obj", "rank", "direction")
+
+  /** A ranking direction: the query key is (`anchor`, pred) and `entity`
+    * is the position ranked among the candidates sharing it. */
+  private final case class Direction(name: String, anchor: String, entity: String)
+  private val Tail = Direction("tail", anchor = "subj", entity = "obj")
+  private val Head = Direction("head", anchor = "obj", entity = "subj")
+
+  /** (direction, subj, pred, obj, rank) for every test row and each of
+    * `dirs` — the plan described at [[filteredRanks]]. */
+  private def ranks(preds: DataFrame, test: DataFrame, known: DataFrame,
+      dirs: Seq[Direction]): DataFrame = {
+    val spo    = Seq("subj", "pred", "obj")
+    val t      = test.select(spo.map(col): _*)
+    val scores = preds.withColumnRenamed("conf", "score")
+    // the target's own score, shared by every direction; NULL = never
+    // predicted (rank stays NULL: it contributes 0 to MRR/hits, the
+    // reference evaluator's behavior for an unranked test triple)
+    val scored = t.join(scores, spo, "left")
+    def tagged(df: DataFrame, d: Direction, isCand: Long) =
+      df.select(lit(d.name).as("direction"), col("pred"),
+        col(d.anchor).as("anchor"), col(d.entity).as("id"), col("score"),
+        lit(isCand).as("is_cand"))
+    val rows = dirs.flatMap { d =>
+      // duplicate keys need no distinct: a semi-join ignores them
+      val testKeys = broadcast(t.select(col(d.anchor), col("pred")))
+      val onKeys   = (df: DataFrame) => df.join(testKeys, Seq(d.anchor, "pred"), "left_semi")
+      val cands    = onKeys(scores).join(onKeys(known.select(spo.map(col): _*)), spo, "left_anti")
+      Seq(tagged(cands, d, 1L), tagged(scored, d, 0L))
+    }.reduce(_.unionByName(_))
+    val w = Window.partitionBy("direction", "pred", "anchor")
+      .orderBy(col("score").desc_nulls_last, col("id"), col("is_cand"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val isTail = col("direction") === Tail.name
+    rows.withColumn("better", sum(col("is_cand")).over(w))
+      .where(col("is_cand") === 0L)
+      .select(col("direction"),
+        when(isTail, col("anchor")).otherwise(col("id")).as("subj"), col("pred"),
+        when(isTail, col("id")).otherwise(col("anchor")).as("obj"),
+        when(col("score").isNotNull, col("better") + 1L).as("rank"))
+  }
 
   /**
    * The linkprediction.py evaluation summary: per direction, MRR and

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.plans.DriverRegime
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * The KG-construction pipeline (BASELINE.json north_rule):
@@ -194,9 +195,10 @@ final class Pipeline(
     *
     * The view is built once per run and reused by every later call until
     * the next [[run]], so each query plans against the same DataFrame and
-    * pays neither stage listing nor schema inference. The entity catalog
-    * `(entity_id, canonical)` behind its two decode joins is chosen once,
-    * when the view is built:
+    * pays neither stage listing nor schema inference. Building it reads
+    * both stages with the schemas declared in `object Pipeline`, so the
+    * build infers none either. The entity catalog `(entity_id, canonical)`
+    * behind its two decode joins is chosen once, when the view is built:
     *  - the `alias_map` manifest counts at most
     *    [[graft.plans.DriverRegime.Ceiling]] rows (an upper bound on the
     *    distinct entities; no probe needed): one scan job collects the
@@ -218,14 +220,15 @@ final class Pipeline(
     * (`driverThreshold = 0`). Not memoized. */
   private[pipeline] def decoded(driverThreshold: Int): DataFrame = {
     val catalogDir = stageDir("alias_map")
-    val scan = spark.read.parquet(catalogDir).select(col("entity_id"), col("canonical"))
+    val scan = spark.read.schema(Pipeline.AliasMapSchema).parquet(catalogDir)
+      .select(col("entity_id"), col("canonical"))
     val (entities, fits) =
       if (Manifest.read(catalogDir).exists(_.totalRows <= driverThreshold)) {
         val rows = scan.collect().distinct
         (spark.createDataFrame(java.util.Arrays.asList(rows: _*), scan.schema), true)
       } else (scan.distinct(), dictFitsBroadcast("alias_map"))
     val hint: DataFrame => DataFrame = if (fits) broadcast else identity
-    spark.read.parquet(stageDir("triples"))
+    spark.read.schema(Pipeline.TriplesSchema).parquet(stageDir("triples"))
       .join(hint(entities.select(col("entity_id").as("subj_id"),
         col("canonical").as("subj"))), "subj_id")
       .join(hint(entities.select(col("entity_id").as("obj_id"),
@@ -256,6 +259,17 @@ object Pipeline {
     * every stage fingerprint so old checkpoints invalidate explicitly.
     * v2 = entity-id-encoded triples + alias catalog with entity_id. */
   val LayoutVersion = 2
+
+  /** On-disk schema of the `alias_map` stage at [[LayoutVersion]]. The
+    * decoded view reads the stage with it, so building a view starts no
+    * schema-inference job. */
+  val AliasMapSchema: StructType =
+    StructType.fromDDL("alias STRING, canonical STRING, entity_id BIGINT")
+
+  /** On-disk schema of the `triples` stage at [[LayoutVersion]], its
+    * `bucket` directory partition column included. */
+  val TriplesSchema: StructType = StructType.fromDDL(
+    "src_doc STRING, src_span INT, subj_id BIGINT, pred STRING, obj_id BIGINT, bucket INT")
 
   /** Max written-parquet bytes of the alias/entity dictionary for which
     * the pipeline still FORCES broadcast joins (above it, Catalyst/AQE

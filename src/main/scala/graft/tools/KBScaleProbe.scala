@@ -51,7 +51,7 @@ object KBScaleProbe {
     // semi-join before joining. kb_link_prediction*: filteredRanks' hub
     // keys — (pred, nation) candidate pools AND test triples on the same
     // key both grow K×, so the old candidate×test pair join was K²; the
-    // per-key score histogram should hold it ~K.
+    // single ranking window should hold it ~K.
     "kb_witness_subgraph", "kb_link_prediction", "kb_link_prediction_maxplus",
     // last: its OUTPUT is quadratic by construction (both join sides
     // replicate K× against the fixed 25-nation hub → K² distinct pairs),

@@ -184,4 +184,30 @@ object BruteForce {
       (ents(rng.nextInt(ents.size)), rels(rng.nextInt(rels.size)), ents(rng.nextInt(ents.size)))
     }.toSet
   }
+
+  /** Filtered link-prediction ranks by per-test-row enumeration, in test
+    * order: rank = 1 + #{non-known predictions on the target's ranking key
+    * with a higher score, or an equal score and a smaller entity}; None
+    * when the target itself was never predicted. Scores are maxplus
+    * vectors (a `max` score is a one-element vector) compared
+    * lexicographically, entities in Spark's UTF-8 byte order. */
+  def filteredRanks(preds: Map[(String, String, String), Seq[Double]],
+      test: Seq[(String, String, String)], known: Set[(String, String, String)],
+      tail: Boolean): Seq[Option[Long]] = {
+    def key(f: (String, String, String))    = if (tail) (f._1, f._2) else (f._2, f._3)
+    def entity(f: (String, String, String)) = if (tail) f._3 else f._1
+    def cmp(a: Seq[Double], b: Seq[Double]): Int =
+      a.zip(b).map { case (x, y) => java.lang.Double.compare(x, y) }
+        .find(_ != 0).getOrElse(Integer.compare(a.size, b.size))
+    test.map { t =>
+      preds.get(t).map { ts =>
+        1L + preds.count { case (c, cs) =>
+          !known(c) && key(c) == key(t) && {
+            val o = cmp(cs, ts)
+            o > 0 || (o == 0 && graft.plans.DriverRegime.utf8Lt(entity(c), entity(t)))
+          }
+        }
+      }
+    }
+  }
 }

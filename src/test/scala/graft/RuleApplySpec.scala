@@ -19,6 +19,15 @@ class RuleApplySpec extends AnyFunSuite {
   private val livesRule =
     RuleParser.parseRule("?x worksAt ?t ?t locatedIn ?c => ?x livesIn ?c")
 
+  /** Three predictions on the tail key (q, r) and the test triple
+    * (q, r, t) twice; the test set doubles as the known facts. */
+  private def dupFixture = {
+    import spark.implicits._
+    (Seq(("q", "r", "a", 0.9), ("q", "r", "t", 0.5), ("q", "r", "b", 0.5))
+      .toDF("subj", "pred", "obj", "conf"),
+     Seq(("q", "r", "t"), ("q", "r", "t")).toDF("subj", "pred", "obj"))
+  }
+
   test("applyRule: distinct head bindings of the body, witness vars deduped") {
     val facts = kb(
       ("ada", "worksAt", "acme"), ("bob", "worksAt", "acme"),
@@ -136,6 +145,80 @@ class RuleApplySpec extends AnyFunSuite {
     assert(math.abs(h10 - 2.0 / 3) < 1e-12)
     // head direction exists and covers the same 3 test triples
     assert(ev("head")._6 == 3)
+  }
+
+  test("duplicated test rows: one output row per copy, each ranked as a single copy") {
+    // tail query (q, r, ?): a (0.9) is better, b (0.5) ties with a smaller
+    // id → rank 3 for each of the two copies of (q, r, t)
+    val (preds, test) = dupFixture
+    val ranks = RuleApply.filteredRanks(preds, test, test, tail = true)
+      .collect().map(r => (r.getString(2), r.getLong(3))).toSeq
+    assert(ranks == Seq(("t", 3L), ("t", 3L)))
+    val tailEval = RuleApply.evaluate(preds, test, test).collect()
+      .find(_.getString(0) == "tail").get
+    assert(tailEval.getLong(5) == 2L && tailEval.getLong(6) == 2L)
+    assert(math.abs(tailEval.getDouble(1) - 1.0 / 3) < 1e-12)
+  }
+
+  test("filteredRanks and evaluate equal a per-test-row brute force on random fixtures") {
+    import spark.implicits._
+    type Fact = (String, String, String)
+    val confs = Seq(0.3, 0.6, 0.9)
+    // ids mix ASCII with U+E000, U+FFFF and a non-BMP character, whose
+    // UTF-8 byte order differs from UTF-16 order
+    val ents  = (0 until 8).map(i => s"e$i") ++ Seq("\uE000", "\uFFFF", "\uD83D\uDE00")
+    for (seed <- 0 until 3; maxplus <- Seq(false, true)) {
+      val rng = new scala.util.Random(seed)
+      def ent() = ents(rng.nextInt(ents.size))
+      def score(): Seq[Double] =
+        if (maxplus) Seq.fill(1 + rng.nextInt(3))(confs(rng.nextInt(confs.size))).sorted.reverse
+        else Seq(confs(rng.nextInt(confs.size)))
+      // a hub key per direction: 40 candidates, all tied at 0.6
+      val hub = (0 until 40).map(i => f"h$i%02d")
+      val preds: Map[Fact, Seq[Double]] =
+        (0 until 70).map(_ => (ent(), s"r${rng.nextInt(2)}", ent()) -> score()).toMap ++
+          hub.map(h => ("hub", "r0", h) -> Seq(0.6)) ++
+          hub.map(h => (h, "r1", "hub") -> Seq(0.6))
+      val predicted  = rng.shuffle(preds.keys.toSeq.sorted)
+      val unpredicted = Seq.fill(6)((ent(), "r1", ent())).filterNot(preds.contains)
+      val tested = predicted.take(14) ++ unpredicted ++
+        Seq(("hub", "r0", "h20"), ("h31", "r1", "hub"))
+      val test   = tested ++ tested.take(3) // duplicated test rows
+      // known-filtered candidates: more predictions, hub ones included.
+      // The first three test triples are left out of `known`: each then
+      // competes for the other targets on its key, never with itself.
+      val known  = tested.drop(3).toSet ++ predicted.slice(14, 30) ++
+        Seq(("hub", "r0", "h03"), ("h07", "r1", "hub"))
+      val predsDf =
+        if (maxplus) preds.toSeq.map { case ((s, p, o), c) => (s, p, o, c) }
+          .toDF("subj", "pred", "obj", "conf")
+        else preds.toSeq.map { case ((s, p, o), c) => (s, p, o, c.head) }
+          .toDF("subj", "pred", "obj", "conf")
+      val testDf  = test.toDF("subj", "pred", "obj")
+      val knownDf = known.toSeq.toDF("subj", "pred", "obj")
+      val ctx   = s"seed $seed, maxplus $maxplus"
+      val evals = RuleApply.evaluate(predsDf, testDf, knownDf).collect()
+      for ((dir, tail) <- Seq("head" -> false, "tail" -> true)) {
+        val want = BruteForce.filteredRanks(preds, test, known, tail)
+        val got  = RuleApply.filteredRanks(predsDf, testDf, knownDf, tail).collect()
+          .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
+            Option(r.get(3)).map(_.asInstanceOf[Long]))).toSeq
+        assert(got.sortBy(_.toString) == test.zip(want).sortBy(_.toString), s"$ctx, $dir")
+        val ev = evals.find(_.getString(0) == dir).get
+        val n = want.size.toDouble
+        def hits(k: Int) = want.count(_.exists(_ <= k)) / n
+        val expect = Seq(want.flatten.map(1.0 / _).sum / n, hits(1), hits(3), hits(10))
+        assert(expect.zip(1 to 4).forall { case (e, i) => math.abs(ev.getDouble(i) - e) < 1e-12 },
+          s"$ctx, $dir: $ev vs $expect")
+        assert(ev.getLong(5) == want.count(_.isDefined) && ev.getLong(6) == want.size, s"$ctx, $dir")
+      }
+    }
+  }
+
+  test("job budget: evaluate collects in at most 10 Spark jobs") {
+    val (preds, test) = dupFixture
+    val (_, jobs) = JobCounter(spark)(RuleApply.evaluate(preds, test, test).collect())
+    assert(jobs <= 10, s"$jobs jobs")
   }
 
   test("LinkPredictCLI: arg parsing, RuleSink TSV round-trip, end-to-end eval (linkprediction.py shape)") {

@@ -4,6 +4,7 @@ import graft.{JobCounter, SparkTestSession}
 import graft.kb.{Atom, Const, QueryBuilder, Var}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -105,5 +106,20 @@ class DecodeViewSpec extends AnyFunSuite {
     assert(queryJobs <= 4, s"$queryJobs jobs")
     val want = oracle(docs).collect { case (`subj`, `rel`, o) => o }.toSet
     assert(want.nonEmpty && answer.map(_.getString(0)).toSet == want)
+  }
+
+  test("job budget: building the view over a finished workDir starts at most 1 job (the catalog scan)") {
+    val docs = Corpus.generate(spark, 300, 40)
+    val dir  = workDir("schema")
+    new Pipeline(spark, dir, nBuckets = 4).run(docs)
+    // the declared stage schemas are the ones the stages write
+    def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSeq.sortBy(_._1)
+    def inferred(stage: String) = fields(spark.read.parquet(s"$dir/$stage").schema)
+    assert(inferred("alias_map") == fields(Pipeline.AliasMapSchema))
+    assert(inferred("triples") == fields(Pipeline.TriplesSchema))
+    val fresh = new Pipeline(spark, dir, nBuckets = 4)
+    val (view, jobs) = JobCounter(spark)(fresh.materialized())
+    assert(jobs <= 1, s"$jobs jobs")
+    assert(spo(view) == oracle(docs))
   }
 }
