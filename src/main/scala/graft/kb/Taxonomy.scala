@@ -69,7 +69,7 @@ object Taxonomy {
       : (Map[String, String], Map[String, String]) = {
     // ONE driver job for all three schema relations (r5 ran three
     // sequential collects — a driver-job cascade measured as the dominant
-    // cost of the kb_domain_set family at sf0.1); the collected table is
+    // cost of the domain-set queries at sf0.1); the collected table is
     // vocabulary-sized by the same contract as before.
     val facts = triples
       .where(col("pred").isin(domainRelation, rangeRelation, subPropertyRelation))
@@ -170,7 +170,7 @@ object Taxonomy {
   /** ALL schema facts (domain, range, subProperty, subClass) in ONE
     * capped driver job — replaces the r5 cascade of 3 collects + a
     * per-round iterative closure job per signatureSet call (measured:
-    * kb_domain_set 4.1 s vs its 1.6 s floor at sf0.1, all driver-job
+    * a domain-set query took 4.1 s vs its 1.6 s floor at sf0.1, all driver-job
     * latency). None above the cap. */
   private def schemaFactsCapped(kb: DataFrame,
       subClassRelation: String): Option[Array[(String, String, String)]] = {

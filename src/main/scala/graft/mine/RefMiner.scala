@@ -19,7 +19,7 @@ import graft.kb.{Atom, Const, Term, Var}
  *     — the part with all the optimization complexity.
  *
  * Scope: the Default bias without constants, type specialization or
- * exists-rewrites (the configuration of the graded mining entries).
+ * exists-rewrites (the configuration the benchmark's `mine` gate uses).
  * Inputs must fit on the driver — callers gate on triple count.
  */
 object RefMiner {

@@ -57,8 +57,9 @@ final class Pipeline(
 
   /** Run one resumable stage: skip when a complete manifest matches the
     * input fingerprint, else compute → write parquet → hand the manifest
-    * write to `submitManifest`. */
-  private def stage(name: String, inputFp0: String,
+    * write to `submitManifest`. Either way the stage is read back with its
+    * declared `schema`, so the read-back starts no schema-inference job. */
+  private def stage(name: String, schema: StructType, inputFp0: String,
       submitManifest: Runnable => Unit, partitionCols: Seq[String] = Nil)(
       compute: => DataFrame): DataFrame = {
     // the fingerprint carries the on-disk LAYOUT version alongside the
@@ -70,7 +71,7 @@ final class Pipeline(
     Manifest.read(dir) match {
       case Some(m) if m.complete && m.inputFingerprint == inputFp =>
         runsSkipped ::= name
-        spark.read.parquet(dir)
+        spark.read.schema(schema).parquet(dir)
       case _ =>
         runsExecuted ::= name
         val df = compute
@@ -94,7 +95,7 @@ final class Pipeline(
           globalChecksum = checksum,
           partitions = Manifest.footerStats(dir, hconf),
           complete = true)))
-        spark.read.parquet(dir)
+        spark.read.schema(schema).parquet(dir)
     }
   }
 
@@ -134,7 +135,8 @@ final class Pipeline(
     // must not resume into the old graph
     val docsFp = inputFp.getOrElse(Manifest.fingerprint(docsDF))
 
-    val mentions = stage("mentions", docsFp, submitManifest)(MentionDetect.mentions(docsDF))
+    val mentions = stage("mentions", Pipeline.MentionsSchema, docsFp, submitManifest)(
+      MentionDetect.mentions(docsDF))
 
     // downstream stages are deterministic functions of the docs input, so
     // the docs fingerprint + a stage tag is their resume identity — no
@@ -154,7 +156,7 @@ final class Pipeline(
     // parquet file, above it they run as distributed rounds (star CC;
     // Dictionary.sortedRanks). Same rows and ids either way.
     val aliasFp   = docsFp + "|aliases"
-    val aliasDict = stage("alias_map", aliasFp, submitManifest) {
+    val aliasDict = stage("alias_map", Pipeline.AliasMapSchema, aliasFp, submitManifest) {
       LinkScore.aliasDictionary(
         LinkScore.bestCandidates(Canonicalize.aliasMap(mentions)))
     }
@@ -162,8 +164,8 @@ final class Pipeline(
     // link scoring is fused into the materialize stage: the linked stream
     // is cheap to recompute from (mentions, alias_map) — persisting it
     // would double the heaviest I/O for no resume value
-    val out = stage("triples", docsFp + "|" + aliasFp, submitManifest,
-        partitionCols = Seq("bucket")) {
+    val out = stage("triples", Pipeline.TriplesSchema, docsFp + "|" + aliasFp,
+        submitManifest, partitionCols = Seq("bucket")) {
       // The materialize exchange is the pipeline's dominant shuffle and
       // this VM (like any node) is bandwidth-bound on row churn: subject
       // and object ship as dictionary-encoded LONGS (bucket/salt computed
@@ -260,9 +262,13 @@ object Pipeline {
     * v2 = entity-id-encoded triples + alias catalog with entity_id. */
   val LayoutVersion = 2
 
-  /** On-disk schema of the `alias_map` stage at [[LayoutVersion]]. The
-    * decoded view reads the stage with it, so building a view starts no
-    * schema-inference job. */
+  /** On-disk schema of the `mentions` stage at [[LayoutVersion]]: the
+    * [[Mention]] columns. Each stage is read back with its declared schema,
+    * so neither a run nor the decoded view starts a schema-inference job. */
+  val MentionsSchema: StructType = StructType.fromDDL(
+    "doc_id STRING, span_idx INT, subj_alias STRING, rel STRING, obj_alias STRING")
+
+  /** On-disk schema of the `alias_map` stage at [[LayoutVersion]]. */
   val AliasMapSchema: StructType =
     StructType.fromDDL("alias STRING, canonical STRING, entity_id BIGINT")
 

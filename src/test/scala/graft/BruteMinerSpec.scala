@@ -10,11 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * independent in-memory reference replicating the documented AMIE
  * output policy over the naive evaluator — asserts set EQUALITY of the
  * engine's mined rules (canonical form AND support/bodySize/pcaBodySize)
- * on random KBs, a planted dims-shaped corpus mirroring kb_mined_rules,
+ * on random KBs, a planted customer → nation → region dims corpus,
  * and hand-computed skyline / perfect-pruning cases. A spurious extra
- * rule, a missing rule, or a wrong metric all fail here; the planted-
- * rule membership gate in SparkEntry.kb_mined_rules covers the oracled
- * query path itself.
+ * rule, a missing rule, or a wrong metric all fail here; RefMinerSpec
+ * and the benchmark's `mine` gate (full-set equality against
+ * [[graft.mine.RefMiner]]) cover the same policy at larger scale.
  */
 class BruteMinerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -45,7 +45,7 @@ class BruteMinerSpec extends AnyFunSuite {
   }
 
   test("planted dims corpus: exact expected set — chain rules recovered, nothing extra") {
-    // the kb_mined_rules shape at toy scale: 30 customers → 6 nations →
+    // a dims-shaped KB at toy scale: 30 customers → 6 nations →
     // 3 regions (custRegion = the composition), 10 suppliers → nations
     val kb: Set[(String, String, String)] =
       (0 until 30).map(i => (s"c$i", "custNation", s"n${i % 6}")).toSet ++

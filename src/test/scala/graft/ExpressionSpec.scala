@@ -58,31 +58,6 @@ class ExpressionSpec extends AnyFunSuite {
     assert(g == Seq("a", null, "b"))
   }
 
-  test("hyperplane signs: driver-precomputed literal equals the md5 formula, incl. beyond the precomputed dim") {
-    // lshBucket's planeDot hoists the (plane, index) md5 sign matrix to a
-    // driver-side string literal (r6 optimization); this differential pins
-    // it to the original in-plan md5 expression, with a 600-dim embedding
-    // so components past MaxPrecomputedDim (512) exercise the fallback.
-    val dim = 600
-    val emb = (1 to 5).map { v =>
-      (v.toLong, Array.tabulate(dim)(i => ((v * 31 + i * 7) % 13 - 6).toFloat / 3f))
-    }.toDF("vec_id", "embedding")
-    val planes = 4
-    def md5PlaneDot(j: Int) = expr(
-      s"""aggregate(zip_with(embedding, sequence(1, size(embedding)), (x, i) ->
-         |  (case when cast(conv(substring(md5(concat('$j', '_', cast(i as string))), 1, 2), 16, 10) as bigint) % 2 = 1
-         |        then 1.0D else -1.0D end) * cast(x as double)),
-         |  0D, (acc, v) -> acc + v)""".stripMargin.replace("\n", " "))
-    val reference = emb.withColumn("bucket",
-      (0 until planes)
-        .map(j => when(md5PlaneDot(j) >= 0, lit(1L << j)).otherwise(0L))
-        .reduce(_ + _))
-      .select("vec_id", "bucket").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = graft.functions.Similarity.lshBucket(emb, planes)
-      .select("vec_id", "bucket").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == reference)
-  }
-
   test("mention detection via the fused expression matches the 3x-regexp_extract form") {
     val docs = Corpus.generate(spark, 500, 40).toDF()
     val p = {

@@ -5,26 +5,24 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The engine has one configuration: its library code reads no
-  * environment variables or system properties. Entry points (`tools/`,
-  * `Verify`, `Bench`) may still read deployment settings. */
+  * environment variables or system properties. Every source file under
+  * `src/main/scala/graft` is library code except the CLI entry points in
+  * `tools/`, which may read deployment settings (`SPARK_MASTER`). */
 class FixedConfigSpec extends AnyFunSuite {
-  private val root = Paths.get("src/main/scala/graft")
-  private val engineDirs = Seq("kb", "mine", "pipeline", "plans", "functions",
-    "sources", "streaming", "expressions")
+  private val root  = Paths.get("src/main/scala/graft")
+  private val tools = root.resolve("tools")
   private val envRead = """sys\.env|System\.getenv|sys\.props""".r
 
-  private def scalaFiles(p: Path): Seq[Path] =
-    if (Files.isDirectory(p)) {
-      val s = Files.walk(p)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    } else Seq(p)
+  private def engineFiles: Seq[Path] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(tools)).toList
+    finally s.close()
+  }
 
   test("engine code reads no environment variables or system properties") {
-    val targets = engineDirs.map(root.resolve) :+ root.resolve("Sessions.scala")
-    targets.foreach(t => assert(Files.exists(t), s"$t missing"))
-    val files = targets.flatMap(scalaFiles)
-    assert(files.size > engineDirs.size)
+    val files = engineFiles
+    assert(files.contains(root.resolve("Sessions.scala")), s"walked the wrong tree: $files")
     val hits = for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex

@@ -156,6 +156,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(p3.runsExecuted == List("triples"))
   }
 
+  /** A workDir with all three stages written under the input fingerprint `finishedFp`. */
+  private val finishedFp = "finished:300"
+  private lazy val finishedDir: String = {
+    val dir = Files.createTempDirectory("graft-finished").toString
+    new Pipeline(spark, dir, nBuckets = 4).run(Corpus.generate(spark, 300, V), Some(finishedFp))
+    dir
+  }
+
+  test("a fully resumed run starts no Spark job") {
+    val p = new Pipeline(spark, finishedDir, nBuckets = 4)
+    val (_, jobs) = JobCounter(spark)(p.run(Corpus.generate(spark, 300, V), Some(finishedFp)))
+    assert(p.runsSkipped.toSet == Set("mentions", "alias_map", "triples"))
+    assert(jobs == 0, s"$jobs jobs to resume a finished run")
+  }
+
+  test("declared stage schemas equal the schemas inferred from the written stages") {
+    for ((stage, declared) <- Seq("mentions" -> Pipeline.MentionsSchema,
+        "alias_map" -> Pipeline.AliasMapSchema, "triples" -> Pipeline.TriplesSchema))
+      assert(spark.read.parquet(s"$finishedDir/$stage").schema == declared, stage)
+  }
+
   test("resume key covers doc content: an edited span under the same doc_id recomputes") {
     val docs = Corpus.generate(spark, 200, V).collect().toSeq
     val dir  = Files.createTempDirectory("graft-resume-edit").toString

@@ -70,51 +70,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("codegen id"), s"stats pass fell out of codegen:\n$p")
   }
 
-  test("pair-producing dedup/similarity ops join on bucket keys, never cartesian") {
-    import spark.implicits._
-    val docs = (1 to 50)
-      .map(i => (i.toLong, s"alpha beta gamma delta tok$i epsilon zeta", "s1", "en"))
-      .toDF("doc_id", "text", "source", "lang")
-    val emb = (1 to 30)
-      .map(i => (i.toLong, Array.fill(8)((i % 7).toFloat + 0.5f), "l1"))
-      .toDF("vec_id", "embedding", "label")
-    for (df <- Seq(
-        graft.functions.Dedup.simhashPairs(docs, maxHamming = 3),
-        graft.functions.Dedup.minhashLsh(docs),
-        graft.functions.Similarity.embeddingNearDups(emb, minCosine = 0.3))) {
-      val p = plan(df)
-      assert(!p.contains("CartesianProduct"), s"cartesian pair join:\n$p")
-      assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pair join:\n$p")
-    }
-  }
-
-  test("ivfTopK: candidate join is hash-keyed; only the dense assignment broadcasts") {
-    import spark.implicits._
-    val emb = (0 until 40)
-      .map(i => (i.toLong, Array.tabulate(8)(d => ((i * 5 + d) % 9 - 4).toFloat), "l1"))
-      .toDF("vec_id", "embedding", "label")
-    val df = graft.functions.Similarity.ivfTopK(emb, nLists = 8, nProbe = 2,
-      nQueries = 4, k = 3)
-    val p = plan(df)
-    // the n×nLists scoring pass is an INTENTIONAL broadcast nested loop
-    // (tiny broadcast side, every pair needed — linear in n); the probed
-    // list → member join and the embedding re-joins must be hash/sort
-    // equi-joins, never a cartesian
-    assert(!p.contains("CartesianProduct"), s"cartesian in IVF plan:\n$p")
-    assert(p.contains("list_id"), s"probe join lost its list key:\n$p")
-  }
-
-  test("simhashClusters: no cartesian, band-keyed candidates") {
-    import spark.implicits._
-    val docs = (1 to 40)
-      .map(i => (i.toLong, s"alpha beta gamma delta tok$i epsilon zeta", "s1", "en"))
-      .toDF("doc_id", "text", "source", "lang")
-    val df = graft.functions.Dedup.simhashClusters(docs, maxHamming = 3)
-    val p = plan(df)
-    assert(!p.contains("CartesianProduct"), s"cartesian in clusters plan:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop in clusters plan:\n$p")
-  }
-
   test("fused rule scoring is one plan: body scanned once, markers broadcastable") {
     val t = pipeline.triples()
     val m = new graft.mine.Metrics(t, KGStats.compute(t))
@@ -135,25 +90,6 @@ class PlanSpec extends AnyFunSuite {
       Atom(Var("t"), Const("isLocatedIn"), Var("c"))))
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), s"cartesian in plan:\n$p")
-  }
-
-  test("banded LSH candidates join on (band, bucket); lshTopK scores without cartesian") {
-    import spark.implicits._
-    val emb = (1 to 40)
-      .map(i => (i.toLong, Array.fill(8)((i % 5).toFloat + 0.25f), "l1"))
-      .toDF("vec_id", "embedding", "label")
-    val df = graft.functions.Similarity.lshTopK(emb, bands = 2, planes = 8, k = 3)
-    val p  = plan(df)
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"pair join degenerated:\n$p")
-    // the candidate join's keys are the band + bucket columns; lshTopK
-    // checkpoints its candidate pairs (consumed twice by the symmetrization
-    // union), so assert the banded keys on embeddingNearDups, whose plan
-    // keeps the candidate join inline
-    val pNd = plan(graft.functions.Similarity.embeddingNearDups(emb, minCosine = 0.5))
-    assert(!pNd.contains("CartesianProduct") && !pNd.contains("BroadcastNestedLoopJoin"),
-      s"near-dup pair join degenerated:\n$pNd")
-    assert(pNd.contains("band") && pNd.contains("bucket"), s"no banded key:\n$pNd")
   }
 
   test("stats hints: hub join broadcasts the small atom and repartitions the fan-out stream") {

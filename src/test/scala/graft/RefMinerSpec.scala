@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Validation of [[RefMiner]] — the indexed in-memory reference miner the
- * `kb_mined_rules` entry uses as its full-set self-gate at correctness
- * scale. Three-way differential closure:
+ * benchmark's `mine` workload uses as its full-set gate. Three-way
+ * differential closure:
  *
  *   - BruteMinerSpec: Spark [[Miner]] ≡ [[BruteForce.mine]] (the naive
  *     set-comprehension miner) on random KBs + hand cases;
@@ -48,7 +48,7 @@ class RefMinerSpec extends AnyFunSuite {
   }
 
   test("RefMiner equals brute force on the planted dims corpus and a hub chain") {
-    // the kb_mined_rules shape at toy scale (same corpus BruteMinerSpec
+    // a dims-shaped KB at toy scale (same corpus BruteMinerSpec
     // pits the Spark miner against)
     val dims: Set[(String, String, String)] =
       (0 until 30).map(i => (s"c$i", "custNation", s"n${i % 6}")).toSet ++

@@ -109,36 +109,4 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getTimestamp(1).getTime / 60000).toMap
     assert(rows == Map("Luis" -> 1L, "Paris" -> 1L, "Telecom" -> 2L))
   }
-
-  test("streaming exact dedup: first copy passes, horizon bounds state, eviction re-admits") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.{StreamingDedup, TimedDoc}
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-
-    def ts(min: Int) = new java.sql.Timestamp(min * 60000L)
-    val in = MemoryStream[TimedDoc]
-    val q = StreamingDedup.dedupByText(in.toDF(), watermarkDelay = "10 minutes")
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-
-    // start at ts(30): the initial watermark is epoch 0 and the late-row
-    // filter drops eventTime <= watermark, so a ts(0) row would vanish
-    in.addData(TimedDoc(1L, "same text", ts(30)), TimedDoc(2L, "other text", ts(31)))
-    q.processAllAvailable()
-    // duplicate within the horizon → dropped
-    in.addData(TimedDoc(3L, "same text", ts(35)))
-    q.processAllAvailable()
-    // fresh text far in the future advances the watermark past the
-    // horizon of every earlier key → their state evicts
-    in.addData(TimedDoc(4L, "fresh text", ts(300)))
-    q.processAllAvailable()
-    // the same text reappearing AFTER eviction is a new first copy
-    in.addData(TimedDoc(5L, "same text", ts(310)))
-    q.processAllAvailable()
-    q.stop()
-
-    val ids = spark.table("dedup_stream").collect().map(_.getLong(0)).toSet
-    assert(ids == Set(1L, 2L, 4L, 5L))
-  }
 }
