@@ -1,6 +1,7 @@
 package graft.kb
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 
 /**
  * Chunked-job execution for the mining layer: many single-row aggregate
@@ -22,6 +23,15 @@ private[graft] object Jobs {
     * already saturates the cores — A/B at sf0.1 was within ambient noise,
     * worst case 40% slower under contention). */
   val DefaultParallelism = 2
+
+  /** The id tag of one part's rows, as a string literal. Whole-stage
+    * codegen inlines an int literal into the generated Java but passes a
+    * string literal by reference, so parts that differ only in their tag
+    * share one compiled class. [[tagOf]] reads the tag back. */
+  def tag(id: Int): Column = lit(id.toString)
+
+  /** The id written by [[tag]] in the first column of a collected row. */
+  def tagOf(row: Row): Int = row.getString(0).toInt
 
   /** Union `parts` into jobs of ≤ `chunk` plans and collect all jobs,
     * up to [[DefaultParallelism]] in flight. Returns all rows (order

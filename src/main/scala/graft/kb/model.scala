@@ -88,10 +88,6 @@ object Atom {
 /** A materialized fact row. Column names are the engine-wide contract. */
 final case class Triple(subj: String, pred: String, obj: String)
 
-/** A fact row with construction lineage (FIXTURES.md §3). */
-final case class LineageTriple(
-    subj: String, pred: String, obj: String, src_doc: String, src_span: Int)
-
 /**
  * Per-relation statistics — the Spark replacement of the reference's
  * relationSize / functionality maps (kb/.../KB.java:386-430,660-708).

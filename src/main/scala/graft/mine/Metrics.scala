@@ -57,7 +57,7 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     val c =
       if (vs.size == 1) countDistinct(col(vs.head.name))
       else countDistinct(struct(vs.map(v => col(v.name)): _*))
-    df.agg(c.as("n")).select(lit(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
+    df.agg(c.as("n")).select(Jobs.tag(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
   }
 
   /** Head size: relation size for a 2-variable head (stats lookup — no
@@ -143,12 +143,12 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     val joined = base.join(hD, headKeys, "left").join(pD, pcaKeys, "left")
     // pre-aggregation form: positional key-field names so the frames of
     // different rules UNION into one shared aggregation per counting
-    // arity (one exchange per scoring wave instead of one per rule);
-    // [[planScoring]] applies the grouped conditional countDistincts
+    // arity (one aggregation per scoring wave instead of one per rule);
+    // [[planScoring]] counts the distinct keys and those each marker hits
     val key = if (hv.size == 1) col(hv.head.name).as("__key")
               else struct(hv.zipWithIndex.map { case (v, i) =>
                 col(v.name).as(s"k$i") }: _*).as("__key")
-    Some(joined.select(lit(ruleId).as("__rid"), key, col("__h"), col("__p")))
+    Some(joined.select(Jobs.tag(ruleId).as("__rid"), key, col("__h"), col("__p")))
   }
 
   /** Bounded distinct count as a 1-row plan: `limit(bound)` over the
@@ -160,7 +160,7 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     val d   = QueryBuilder.selectDistinct(triples, vs, atoms)
     val lim = if (bound > 0 && bound < Int.MaxValue) d.limit(bound.toInt) else d
     lim.agg(count(lit(1)).as("n"))
-      .select(lit(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
+      .select(Jobs.tag(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
   }
 
   /** Score a batch of closed rules in a handful of chunked jobs. */
@@ -274,9 +274,9 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
 
     def finish(res: IndexedSeq[Seq[Row]]): Seq[ScoredRule] = {
       res(0).foreach(row =>
-        counts(row.getInt(0)) = (row.getLong(1), row.getLong(2), row.getLong(3)))
+        counts(Jobs.tagOf(row)) = (row.getLong(1), row.getLong(2), row.getLong(3)))
 
-      res(1).groupBy(_.getInt(0)).foreach { case (i, rows) =>
+      res(1).groupBy(Jobs.tagOf).foreach { case (i, rows) =>
         val m = rows.map(row => row.getString(1) -> row.getLong(2)).toMap
         counts(i) = (
           knownSupport.getOrElse(i, m.getOrElse("support", 0L)),
@@ -286,18 +286,23 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
       }
 
       val headSizes: Map[Int, Long] =
-        res(2).map(row => row.getInt(0) -> row.getLong(2)).toMap
+        res(2).map(row => Jobs.tagOf(row) -> row.getLong(2)).toMap
 
       assemble(rules, counts, confSupport, headSizes, bias)
     }
 
+    // the three distinct counts as two plain aggregations: one row per
+    // (rule, key) carrying whether any of its rows hit each marker, then
+    // per-rule counts. Three countDistincts would be rewritten through an
+    // Expand whose branch order follows expression-id hashes, which differ
+    // per plan, so the same scoring shape would generate new code.
     val fusedParts = fusedBuckets.values.toSeq.map { frames =>
       frames.reduce(_ unionAll _)
+        .groupBy(col("__rid"), col("__key"))
+        .agg(max(col("__h")).as("__h"), max(col("__p")).as("__p"))
         .groupBy(col("__rid"))
-        .agg(
-          countDistinct(when(col("__h") === 1, col("__key"))).as("support"),
-          countDistinct(col("__key")).as("body"),
-          countDistinct(when(col("__p") === 1, col("__key"))).as("pca"))
+        .agg(count(col("__h")).as("support"), count(col("__key")).as("body"),
+          count(col("__p")).as("pca"))
         .select(col("__rid").as("rule_id"),
           col("support"), col("body"), col("pca"))
     }

@@ -226,11 +226,11 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
       QueryBuilder.distinctableBindings(kb, n.rule.head :: cc,
           Set(nv.name, fv.name), Some(stats))
         .groupBy(col(nv.name)).agg(countDistinct(col(fv.name)).as("supp"))
-        .select(lit(i).as("id"), col(nv.name).as("c"), col("supp"))
+        .select(Jobs.tag(i).as("id"), col(nv.name).as("c"), col("supp"))
     }
     val out = scala.collection.mutable.ArrayBuffer[Node]()
     for (row <- Jobs.collectChunked(parts, Metrics.JobChunk)) {
-      val (n, _, nv) = tasks(row.getInt(0))
+      val (n, _, nv) = tasks(Jobs.tagOf(row))
       val supp       = row.getLong(2)
       if (supp >= initialThreshold(headRel(n.rule))) {
         def sub(t: Term): Term = if (t == nv) Const(row.getString(1)) else t
@@ -472,10 +472,10 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
             // join against the cached (relation, value) index views
             (tpl.s, tpl.o) match {
               case (j: Var, f: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
-                struct(lit(tplId).as("tid"), lit("s").as("__k1"),
+                struct(Jobs.tag(tplId).as("tid"), lit("s").as("__k1"),
                   col(j.name).as("__k2"))
               case (f: Var, j: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
-                struct(lit(tplId).as("tid"), lit("o").as("__k1"),
+                struct(Jobs.tag(tplId).as("tid"), lit("o").as("__k1"),
                   col(j.name).as("__k2"))
               case other => sys.error(s"malformed dangling template: $other")
             }
@@ -483,7 +483,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
             // closing templates: every ordered variable pair joins the
             // same fact table, keyed (subj, obj)
             case (a: Var, b: Var) =>
-              struct(lit(tplId).as("tid"), col(a.name).as("__k1"),
+              struct(Jobs.tag(tplId).as("tid"), col(a.name).as("__k1"),
                 col(b.name).as("__k2"))
             case other => sys.error(s"malformed closing template: $other")
           }
@@ -510,7 +510,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         QueryBuilder.distinctableBindings(kb, (r.atoms ++ cc) :+ tpl,
             hv.map(_.name).toSet + candCol, Some(stats))
           .groupBy(col(candCol)).agg(cd.as("supp"))
-          .select(lit(tplId).as("tpl_id"), col(candCol).as("rel"), col("supp"))
+          .select(Jobs.tag(tplId).as("tpl_id"), col(candCol).as("rel"), col("supp"))
       }
     }
     val mergedParts = mergedBodies.toSeq.map { case ((isDangling, _), frames) =>
@@ -552,7 +552,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     val children  = scala.collection.mutable.ArrayBuffer[Node]()
     val reguarded = scala.collection.mutable.ArrayBuffer[(Rule, Double)]() // needs support re-measure
     for (row <- res(0)) {
-      val (idx, tpl, isDangling) = templates(row.getInt(0))
+      val (idx, tpl, isDangling) = templates(Jobs.tagOf(row))
       val rel           = row.getString(1)
       val supp          = row.getLong(2)
       val parent        = nodes(idx)
@@ -631,10 +631,10 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         QueryBuilder.distinctableBindings(kb,
             r.atoms ++ bias.countConstraints(metrics, r),
             hv.map(_.name).toSet, Some(stats)).agg(cd.as("supp"))
-          .select(lit(i).as("id"), col("supp"))
+          .select(Jobs.tag(i).as("id"), col("supp"))
       }
       val supps = Jobs.collectChunked(parts.toSeq, Metrics.JobChunk)
-        .map(row => row.getInt(0) -> row.getLong(1)).toMap
+        .map(row => Jobs.tagOf(row) -> row.getLong(1)).toMap
       reguarded.zipWithIndex.foreach { case ((r, floor), i) =>
         val supp = supps.getOrElse(i, 0L)
         if (supp >= supportThreshold(headRel(r))) children += Node(r, floor, supp)
@@ -743,7 +743,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
           r.atoms ++ bias.countConstraints(metrics, r),
           (v +: rest).map(_.name).toSet, Some(stats))
         .groupBy(col(v.name)).agg(cd.as("supp"))
-        .select(lit(taskId).as("task_id"), col(v.name).as("c"), col("supp"))
+        .select(Jobs.tag(taskId).as("task_id"), col(v.name).as("c"), col("supp"))
     }
     (tasks, parts)
   }
@@ -758,7 +758,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     val tasks = plan.instTasks
     val out = scala.collection.mutable.ArrayBuffer[Node]()
     for (row <- counted) {
-      val (idx, v) = tasks(row.getInt(0))
+      val (idx, v) = tasks(Jobs.tagOf(row))
       val c        = row.getString(1)
       val supp     = row.getLong(2)
       val parent   = nodes(idx)

@@ -118,11 +118,6 @@ object MiningBias {
     (kb.select("subj", "pred", "obj").union(facts), seeds.count())
   }
 
-  /** Distinct-subject count of a KB (seeds-count helper for the common
-    * schema-is-the-data-KB invocation). */
-  def distinctSubjectCount(kb: org.apache.spark.sql.DataFrame): Long =
-    kb.select("subj").distinct().count()
-
   /** DefaultMiningAssistant: support = #distinct bindings of BOTH head
     * variables (DMA:636-655). */
   case object Default extends MiningBias {

@@ -8,9 +8,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  * Per-stage checkpoint manifest — the resumability + lineage contract of
  * the north rule (FIXTURES.md §3): every stage write is accompanied by a
  * `_manifest.json` recording the stage id, a fingerprint of its input,
- * and per-partition row counts + order-independent checksums. A stage
- * whose manifest exists, is complete, and matches the current input
- * fingerprint is skipped on restart and its parquet output reused.
+ * per-file row counts and bytes, and an order-independent content
+ * checksum. A stage whose manifest exists, is complete, and matches the
+ * current input fingerprint is skipped on restart and its parquet output
+ * reused.
  *
  * Written atomically (tmp file + move) so a crash mid-write never leaves
  * a manifest that claims completeness. This emulates the Iceberg
@@ -39,18 +40,6 @@ object Manifest {
       count(lit(1)).as("n"),
       coalesce(bit_xor(xxhash64(cols.toSeq: _*)), lit(0L)).as("h")).collect()(0)
     s"${r.getLong(0)}:${r.getLong(1)}"
-  }
-
-  /** Per-partition lineage counters of a materialized DataFrame — the
-    * full-content variant (one extra pass; used by tests/audits). */
-  def partitionStats(df: DataFrame): Seq[PartitionStat] = {
-    val cols = df.columns.map(c => col(c).cast("string"))
-    df.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("rows"),
-        coalesce(bit_xor(xxhash64(cols.toSeq: _*)), lit(0L)).as("checksum"))
-      .collect()
-      .map(r => PartitionStat(r.getInt(0), r.getLong(1), 0L, r.getLong(2)))
-      .sortBy(_.id).toSeq
   }
 
   /**

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * TSV/CSV fact source + sink — the reference's native interchange format
@@ -20,6 +21,9 @@ object TsvFacts {
   def load(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
     val raw  = spark.read.option("sep", sep).csv(path)
     val cols = raw.columns.length
+    // schema inference over an empty file finds no columns: no facts
+    if (cols == 0) return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq("subj", "pred", "obj").map(StructField(_, StringType))))
     require(cols == 3 || cols == 4, s"fact file must have 3 or 4 columns, got $cols")
     val (s, p, o) =
       if (cols == 4) (raw.columns(1), raw.columns(2), raw.columns(3))

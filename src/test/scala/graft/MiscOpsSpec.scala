@@ -209,6 +209,10 @@ class MiscOpsSpec extends AnyFunSuite {
     val out = dir.resolve("dump").toString
     TsvFacts.dump(t3, out)
     assert(TsvFacts.load(spark, out).count() == 2)
+
+    // an empty file is a fact file with no facts
+    val empty = TsvFacts.load(spark, java.nio.file.Files.createFile(dir.resolve("empty.tsv")).toString)
+    assert(empty.schema == t3.schema && empty.collect().isEmpty)
   }
 
   test("datalog and AnyBURL rule formats match reference rendering") {

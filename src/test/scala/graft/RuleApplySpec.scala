@@ -259,6 +259,13 @@ class RuleApplySpec extends AnyFunSuite {
     w.close()
     val plain = LinkPredictCLI.loadRules(spark, s"$dir/plain.txt", "pca")
     assert(plain.head._2 == 0.75)
+    // an empty valid.tsv is a split with no valid facts: lives(3) becomes
+    // a head candidate for ci1, tied with the target p01 and ordered
+    // after it, so every rank stays 1
+    writeTsv("valid.tsv", Seq.empty)
+    val noValid = LinkPredictCLI.run(spark, a).collect()
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(5), r.getLong(6))).toMap
+    assert(noValid("tail") == ((1.0, 3L, 3L)) && noValid("head") == ((1.0, 3L, 3L)))
   }
 
   test("LinkPredictCLI: -train/-test overrides make the single positional the rules file (ADVICE r4)") {

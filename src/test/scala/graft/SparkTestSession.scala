@@ -2,16 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test run. */
+/** One shared local SparkSession for the whole test run, built with the
+  * engine's own configuration ([[Sessions.tune]]), so the suite runs what
+  * the CLIs and perfbench run. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = Sessions.tune(SparkSession.builder().master("local[4]"), 4, "graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
