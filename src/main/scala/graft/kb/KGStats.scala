@@ -25,34 +25,26 @@ final case class KGStats(relations: Map[String, RelationStats], totalFacts: Long
 }
 
 object KGStats {
-  /** Single shuffle: groupBy(pred) with count + two exact countDistincts.
-    * Exactness is required by BASELINE.md (no approx_count_distinct). */
+  /** One collect of [[relationCounts]]: the driver-side stats table. */
   def compute(triples: DataFrame): KGStats = {
-    val rows = triples
-      .groupBy("pred")
-      .agg(
-        count(lit(1)).as("size"),
-        countDistinct(col("subj")).as("ds"),
-        countDistinct(col("obj")).as("dobj"))
-      .collect()
-    val m = rows.map { r =>
+    val m = relationCounts(triples).collect().map { r =>
       val s = RelationStats(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
       s.pred -> s
     }.toMap
     KGStats(m, m.values.map(_.size).sum)
   }
 
-  /** Per-relation stats as a DataFrame (for the stats-pass operator surface:
-    * relationSize / relationColumnSize / functionality, KB.java:660-708). */
-  def statsDF(triples: DataFrame): DataFrame =
+  /** The aggregation [[compute]] collects — single shuffle: groupBy(pred)
+    * with count + two exact countDistincts, one row per relation
+    * (relationSize / relationColumnSize, KB.java:660-708). Exactness is
+    * required by BASELINE.md (no approx_count_distinct). */
+  private[graft] def relationCounts(triples: DataFrame): DataFrame =
     triples
       .groupBy("pred")
       .agg(
         count(lit(1)).as("size"),
-        countDistinct(col("subj")).as("distinct_subj"),
-        countDistinct(col("obj")).as("distinct_obj"))
-      .withColumn("functionality", col("distinct_subj") / col("size"))
-      .withColumn("inv_functionality", col("distinct_obj") / col("size"))
+        countDistinct(col("subj")).as("ds"),
+        countDistinct(col("obj")).as("dobj"))
 
   /**
    * Relation-pair overlap tables (KB.java:469-648): for positions

@@ -389,10 +389,10 @@ object QueryBuilder {
    * materialized combinator (Schema.java:341-350) include direct
    * instances of C. A declarative engine needs ONE semantics for the
    * atom regardless of which terms are bound, so this table is it:
-   * direct instances included, matching [[Taxonomy.transitiveInstances]]
-   * and standard RDFS entailment. Schema relation names are the
-   * engine-wide defaults [[Atom.TypeRelation]]/[[Atom.SubClassRelation]]
-   * carried inline in the KB (as in the reference's schema-enabled KBs).
+   * direct instances included, matching standard RDFS entailment. Schema
+   * relation names are the engine-wide defaults
+   * [[Atom.TypeRelation]]/[[Atom.SubClassRelation]] carried inline in the
+   * KB (as in the reference's schema-enabled KBs).
    *
    * The subclass closure's driver loop runs ONCE per KB DataFrame (the
    * pair table is memoized per analyzed plan, weakly — dropped with the

@@ -64,27 +64,10 @@ final case class MinerConfig(
       * alone this reproduces the typed assistant's B ∧ is(x,C) ∧ is(y,C')
       * rule space (TypedDefaultMiningAssistant.java:25-80). */
     instantiationTargetRelations: Seq[String] = Nil,
-    /** relations whose atoms' open variables are never instantiated
-      * (AMIEOptions -iexr). */
-    instantiationExcludedRelations: Set[String] = Set.empty,
     /** counting/denominator strategy — the assistant-variant surface
       * (MiningAssistantFactory.java:33-90): default, oneVar, lazy,
       * signatured. */
-    bias: MiningBias = MiningBias.Default,
-    /** O_T type specialization (MiningAssistant.java:902-925; disabled in
-      * the reference's default assistant too, DMA:409-411 — opt-in here):
-      * a rule whose last body atom is `typeRelation(x, C)` spawns children
-      * replacing C with each DIRECT subtype, support re-measured. Supply
-      * parent → direct-subtypes via [[graft.kb.Taxonomy.directSubTypes]]. */
-    enableTypeSpecialization: Boolean = false,
-    typeRelation: String = "rdf:type",
-    subTypes: Map[String, Seq[String]] = Map.empty,
-    /** the KB contract is a fact SET (the reference dedups on insert,
-      * KB.java:334-381); a caller whose input is distinct BY CONSTRUCTION
-      * (e.g. dimension rows keyed by a unique id) may skip the miner's
-      * defensive dedup shuffle. Metrics are silently wrong if the
-      * assertion is false — leave off unless provable. */
-    assumeDistinct: Boolean = false)
+    bias: MiningBias = MiningBias.Default)
 
 /**
  * Level-synchronous BFS rule miner — the Spark re-architecture of the
@@ -109,8 +92,7 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     * and it is scanned by every candidate-counting job of every level —
     * cache it (at cluster scale this is the in-memory columnar copy the
     * reference holds in its six indexes). */
-  private val kb =
-    (if (config.assumeDistinct) triples else triples.distinct()).cache()
+  private val kb = triples.distinct().cache()
   val stats: KGStats   = KGStats.compute(kb)
   private val metrics  = new Metrics(kb, stats)
   private val candCol  = "__cand_rel" // pred-position variable of the template atom
@@ -595,18 +577,6 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         else reguarded += ((Rule(child.head, child.body ++ guards), floor))
       }
     }
-    // O_T type specialization (MA:902-925, opt-in): children join the same
-    // support re-measure batch as the guarded ones. Counting uses the
-    // active bias's variables (the reference's base impl counts the
-    // functional variable; the per-bias choice keeps thresholds coherent
-    // with every other operator here).
-    if (config.enableTypeSpecialization) {
-      for (n <- nodes if refinable(n); child <- typeSpecializations(n.rule)) {
-        val floor = math.max(n.ancestorConf,
-          outputConf.getOrElse(n.rule.canonical, -1.0))
-        reguarded += ((child, floor))
-      }
-    }
     // Exists-rewrite variant (ExistentialRulesMiningAssistant
     // .getClosingAtoms :46-79, via MiningBias.ExistentialRules): a
     // refinable rule with open variables ALSO spawns the candidate where
@@ -620,9 +590,9 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         reguarded += ((child, floor))
       }
     }
-    // re-measure guarded/specialized children in chunked jobs (the guard
+    // re-measure guarded/rewritten children in chunked jobs (the guard
     // only shrinks support, so the threshold must be re-checked —
-    // DMA:381-393; specialized atoms change support entirely)
+    // DMA:381-393; rewritten atoms change support entirely)
     if (reguarded.nonEmpty) {
       val parts = reguarded.zipWithIndex.map { case ((r, _), i) =>
         val hv = countVarsOf(r)
@@ -673,22 +643,6 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     Some(Rule(r.head, (untouched ++ rewritten).distinct))
   }
 
-  /** Type-specialized children of one rule (no support yet): last body
-    * atom `typeRelation(x, C)` with constant C → one child per direct
-    * subtype of C (MiningAssistant.getTypeSpecializedAtoms, MA:902-925). */
-  private[graft] def typeSpecializations(r: Rule): Seq[Rule] = {
-    val i = r.body.lastIndexWhere(!_.isPseudo)
-    if (i < 0) return Nil
-    val a = r.body(i)
-    (a.p, a.o) match {
-      case (Const(p), Const(cls)) if p == config.typeRelation =>
-        config.subTypes.getOrElse(cls, Nil).map { sub =>
-          Rule(r.head, r.body.updated(i, a.copy(o = Const(sub))))
-        }
-      case _ => Nil
-    }
-  }
-
   /**
    * O_I instantiation (SURVEY.md §2.9; reference `@MiningOperator
    * ("instantiated")`, DefaultMiningAssistant.java:458-521 +
@@ -705,17 +659,16 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
   private def planInstantiations(
       nodes: Seq[Node]): (IndexedSeq[(Int, Var)], Seq[DataFrame]) = {
     if (!config.enableConstants) return (IndexedSeq.empty, Nil)
-    // -itr / -iexr (AMIEOptions): an open variable belongs to exactly
-    // one real atom; its relation gates whether the variable may be
-    // instantiated (the reference applies the filter to the dangling
-    // atom being instantiated, DMA getInstantiatedAtoms)
+    // -itr (AMIEOptions): an open variable belongs to exactly one real
+    // atom; its relation gates whether the variable may be instantiated
+    // (the reference applies the filter to the dangling atom being
+    // instantiated, DMA getInstantiatedAtoms)
     def instantiable(r: Rule, v: Var): Boolean =
       r.atoms.filterNot(_.isPseudo).find(_.vars.contains(v))
         .flatMap(_.p match { case Const(p) => Some(p); case _ => None })
         .forall { p =>
-          (config.instantiationTargetRelations.isEmpty ||
-            config.instantiationTargetRelations.contains(p)) &&
-          !config.instantiationExcludedRelations.contains(p)
+          config.instantiationTargetRelations.isEmpty ||
+            config.instantiationTargetRelations.contains(p)
         }
     val tasks = (for {
       (n, i) <- nodes.zipWithIndex

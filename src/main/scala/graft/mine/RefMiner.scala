@@ -18,8 +18,8 @@ import graft.kb.{Atom, Const, Term, Var}
  *     [[Miner.mine]] checks the entire Spark compilation/counting layer
  *     — the part with all the optimization complexity.
  *
- * Scope: the Default bias without constants, type specialization or
- * exists-rewrites (the configuration the benchmark's `mine` gate uses).
+ * Scope: the Default bias without constants or exists-rewrites (the
+ * configuration the benchmark's `mine` gate uses).
  * Inputs must fit on the driver — callers gate on triple count.
  */
 object RefMiner {
@@ -29,7 +29,7 @@ object RefMiner {
       pcaConfidence: Double)
 
   def mine(triples: Seq[(String, String, String)], config: MinerConfig): Seq[RefScored] = {
-    require(!config.enableConstants && !config.enableTypeSpecialization,
+    require(!config.enableConstants,
       "RefMiner covers the default-bias subset only")
     require(!config.enableConfidenceBounds && !config.enableFunctionalityHeuristic,
       "pruning estimates off: the exact search is the differential target")

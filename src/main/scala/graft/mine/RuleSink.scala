@@ -33,15 +33,6 @@ object RuleSink {
       .orderBy("Rule")
   }
 
-  /** TSV with header, single file per mining run (rule sets are small —
-    * driver-side objects — so coalesce(1) is correct here). */
-  def writeTsv(spark: SparkSession, rules: Seq[ScoredRule], path: String): Unit =
-    toDF(spark, rules)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("sep", "\t").option("header", "true")
-      .csv(path)
-
   /** Datalog-like format (DatalogLikeRuleFormatter): same columns, rule
     * rendered `h(s,o) <= b1(..), b2(..)`. */
   def toDatalogDF(spark: SparkSession, rules: Seq[ScoredRule]): DataFrame = {

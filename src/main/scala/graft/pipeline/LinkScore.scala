@@ -41,18 +41,6 @@ object LinkScore {
       .groupBy("alias")
       .agg(max_by(col("canonical"), struct(col("score"), col("canonical"))).as("canonical"))
 
-  /** mentions + aliasMap → linked mentions with canonical subj/obj.
-    * Two map-side (broadcast) joins; zero shuffles of the mention stream. */
-  def link(mentions: DataFrame, aliasMap: DataFrame): DataFrame = {
-    val best = bestCandidates(aliasMap)
-    val subj = best.select(col("alias").as("subj_alias"), col("canonical").as("subj"))
-    val obj  = best.select(col("alias").as("obj_alias"), col("canonical").as("obj"))
-    mentions
-      .join(broadcast(subj), "subj_alias")
-      .join(broadcast(obj), "obj_alias")
-      .select("doc_id", "span_idx", "subj", "rel", "obj")
-  }
-
   /** Canonical entity → dense id (1-based sorted rank; sorted-order ids
     * make encode and decode deterministic under any partitioning). This
     * is the distributed regime of [[aliasDictionary]]: at 10¹² docs the
@@ -109,8 +97,10 @@ object LinkScore {
   }
 
   /**
-   * [[link]] with subject/object DICTIONARY-ENCODED to longs (subject
-   * kept as a string column too, for the storage-bucket hash; the
+   * mentions + alias catalog → linked mentions: two joins, map-side
+   * (broadcast) under the default `broadcastDict`, so the mention stream
+   * is not shuffled. Subject/object come out DICTIONARY-ENCODED to longs
+   * (subject kept as a string column too, for the storage-bucket hash; the
    * relation keeps its string form — relation cardinality is tiny, the
    * parquet sink dictionary-encodes it to ~1 byte/row, and a physical
    * `pred` column is what lets downstream mining scans push relation

@@ -129,7 +129,7 @@ object MineCLI {
         (augmented, config.copy(bias = MiningBias.SeedsCount(n)))
       case "typed" =>
         (kb, config.copy(bias = MiningBias.Default, enableConstants = true,
-          instantiationTargetRelations = Seq(config.typeRelation)))
+          instantiationTargetRelations = Seq("rdf:type")))
       case "signatured" =>
         val (d, r) = Taxonomy.relationSignatures(kb)
         (kb, config.copy(bias = MiningBias.Signatured(d, r)))

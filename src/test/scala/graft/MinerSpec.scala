@@ -13,12 +13,16 @@ class MinerSpec extends AnyFunSuite {
     minSupport = 2, minHeadCoverage = 0.1, minPcaConfidence = 0.1,
     maxDepth = 3)
 
-  test("assumeDistinct on a distinct KB mines the identical rule set") {
-    val base = Fixtures.baseKB(spark).distinct()
-    val a = new Miner(base, cfg).mine()
-    val b = new Miner(base, cfg.copy(assumeDistinct = true)).mine()
-    assert(a.map(s => (s.rule.canonical, s.support, s.bodySize, s.pcaBodySize)) ==
-      b.map(s => (s.rule.canonical, s.support, s.bodySize, s.pcaBodySize)))
+  test("duplicate fact rows mine the same rules and metrics as the distinct KB") {
+    // the KB is a fact SET: every fact three times must not inflate the
+    // stats pass (relation sizes, so head coverage) or any count
+    val kb  = Fixtures.extendedKB(spark)
+    val dup = kb.union(kb).union(kb)
+    def key(rules: Seq[ScoredRule]) = rules.map(s => (s.rule.canonical,
+      s.support, s.bodySize, s.pcaBodySize, s.headCoverage, s.pcaConfidence))
+    val want = key(new Miner(kb.distinct(), cfg).mine())
+    assert(want.nonEmpty)
+    assert(key(new Miner(dup, cfg).mine()) == want)
   }
 
   test("mine() releases the Miner's cached state — no growth across lifecycles (r4 verdict)") {
@@ -140,46 +144,6 @@ class MinerSpec extends AnyFunSuite {
     assert(guarded.get.support == 2)
     assert(guarded.get.stdConfidence == 1.0)
     assert(guarded.get.pcaConfidence == 1.0)
-  }
-
-  test("O_T type specialization: subtype children with re-measured support") {
-    import spark.implicits._
-    val kb = Seq(
-      Triple("a", "mortal", "yes"), Triple("b", "mortal", "yes"),
-      Triple("c", "mortal", "yes"),
-      Triple("a", "rdf:type", "Person"), Triple("b", "rdf:type", "Person"),
-      Triple("c", "rdf:type", "Person"),
-      Triple("a", "rdf:type", "Student"), Triple("b", "rdf:type", "Student"),
-      Triple("c", "rdf:type", "Prof")).toDF()
-    val subTypes = Taxonomy.directSubTypes(
-      Seq(("Student", "Person"), ("Prof", "Person")).toDF("child", "parent"))
-    assert(subTypes == Map("Person" -> Seq("Prof", "Student")))
-
-    val cfgT = MinerConfig(minSupport = 2, minHeadCoverage = 0.1,
-      minPcaConfidence = 0.1, maxDepth = 3, enableConstants = true,
-      enableTypeSpecialization = true, subTypes = subTypes)
-    val miner = new Miner(kb, cfgT)
-
-    // unit semantics: last-atom type constant → one child per subtype
-    val parent = Rule(Atom(Var("x"), Const("mortal"), Var("y")),
-      List(Atom(Var("x"), Const("rdf:type"), Const("Person"))))
-    assert(miner.typeSpecializations(parent).map(_.body.head.o).toSet ==
-      Set(Const("Prof"), Const("Student")))
-    // non-type or variable-object last atoms specialize to nothing
-    assert(miner.typeSpecializations(Rule(parent.head,
-      List(Atom(Var("x"), Const("rdf:type"), Var("z"))))).isEmpty)
-    assert(miner.typeSpecializations(Rule(parent.head,
-      List(Atom(Var("x"), Const("worksAt"), Const("Person"))))).isEmpty)
-
-    // integration: the specialized Student rule is mined with support 2
-    // (Prof has support 1 < 2 and must be absent)
-    val rules = miner.mine()
-    val student = rules.find(_.rule.body ==
-      List(Atom(Var("x"), Const("rdf:type"), Const("Student"))))
-    assert(student.isDefined, rules.map(_.rule.amieString).mkString("\n"))
-    assert(student.get.support == 2)
-    assert(rules.forall(_.rule.body !=
-      List(Atom(Var("x"), Const("rdf:type"), Const("Prof")))))
   }
 
   test("backtracking equivalence matches canonical-form equality") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.kb._
 import graft.mine._
-import graft.sources.LangFacts
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parser round-trips (ports of the reference's TestKBTripleParsing /
@@ -43,103 +42,6 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(closure.contains(("x", "z")))
     assert(!closure.contains(("b", "a")))
     assert(closure.size == 3 + 2 + 1 + 4 + 1) // chain closure 6, diamond 5
-  }
-
-  test("transitive instances include subclass members") {
-    import spark.implicits._
-    val types = Seq(("e1", "Dog"), ("e2", "Animal"), ("e3", "Cat"), ("e4", "Rock"))
-      .toDF("entity", "cls")
-    val sub = Seq(("Dog", "Mammal"), ("Cat", "Mammal"), ("Mammal", "Animal"))
-      .toDF("child", "parent")
-    val got = Taxonomy.transitiveInstances(types, sub, "Animal")
-      .collect().map(_.getString(0)).toSet
-    assert(got == Set("e1", "e2", "e3"))
-  }
-
-  test("domainSet/rangeSet: declared-class closure ∪ observed entities (Schema.java:608-621,695-712)") {
-    import spark.implicits._
-    // owns: domain Person (Employee ⊑ Person, depth-2 via Staff ⊑ Employee),
-    // range Thing. p3 is untyped but observed as a subject; t9 typed Thing
-    // but never an object; u1 is typed with an unrelated class.
-    val kb = Seq(
-      ("p1", "owns", "car1"), ("p2", "owns", "car2"), ("p3", "owns", "car1"),
-      ("p1", "rdf:type", "Person"), ("p2", "rdf:type", "Staff"),
-      ("p4", "rdf:type", "Employee"), ("u1", "rdf:type", "Alien"),
-      ("car1", "rdf:type", "Thing"), ("t9", "rdf:type", "Thing"),
-      ("Staff", "rdfs:subClassOf", "Employee"),
-      ("Employee", "rdfs:subClassOf", "Person"),
-      ("owns", "rdfs:domain", "Person"), ("owns", "rdfs:range", "Thing"),
-      ("likes", "rdf:type", "rdf:Property")).toDF("subj", "pred", "obj")
-    // subclassClosure = true: the entailed superset — Staff/Employee-typed
-    // p2, p4 enter through the closure
-    val dom = Taxonomy.domainSet(kb, "owns", subclassClosure = true)
-      .collect().map(_.getString(0)).toSet
-    assert(dom == Set("p1", "p2", "p3", "p4")) // typed closure ∪ subjects, no u1
-    // default = reference parity (getAllEntitiesForType is a DIRECT
-    // rdf:type lookup, Schema.java:575-585): p4 (typed only via the
-    // Employee subclass, never observed) drops; p2 stays via the
-    // observed-subject branch only
-    val domDirect = Taxonomy.domainSet(kb, "owns")
-      .collect().map(_.getString(0)).toSet
-    assert(domDirect == Set("p1", "p2", "p3"))
-    val rng = Taxonomy.rangeSet(kb, "owns", subclassClosure = true)
-      .collect().map(_.getString(0)).toSet
-    assert(rng == Set("car1", "car2", "t9"))
-    // range has no subclass-only-typed entity → direct equals closure here
-    assert(Taxonomy.rangeSet(kb, "owns").collect().map(_.getString(0)).toSet
-      == rng)
-    // no declared domain → observed subjects only (Schema.java:616-617)
-    val noDecl = Taxonomy.domainSet(kb, "likes").collect().map(_.getString(0)).toSet
-    assert(noDecl == Set.empty)
-  }
-
-  test("histogramOnDomain: functional side, typed-only, hand-computed (Schema.java:742-779)") {
-    import spark.implicits._
-    // speaks: subjects unique-ish (functionality > inverse) → per-subject
-    // counts against domain Person; p3 (2 langs) is untyped → excluded.
-    val kb = Seq(
-      ("p1", "speaks", "en"), ("p1", "speaks", "fr"), ("p1", "speaks", "de"),
-      ("p2", "speaks", "en"),
-      ("p3", "speaks", "en"), ("p3", "speaks", "fr"),
-      ("p4", "speaks", "en"),
-      ("p1", "rdf:type", "Person"), ("p2", "rdf:type", "Staff"),
-      ("p4", "rdf:type", "Person"),
-      ("Staff", "rdfs:subClassOf", "Person"),
-      ("speaks", "rdfs:domain", "Person")).toDF("subj", "pred", "obj")
-    val stats = KGStats.compute(kb)
-    // 4 distinct subjects / 7 facts vs 3 distinct objects / 7 facts
-    assert(stats.functionality("speaks") >= stats.inverseFunctionality("speaks"))
-    val hist = Taxonomy.histogramOnDomain(kb, "speaks", stats,
-        subclassClosure = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // p1: 3 facts, p2: 1, p4: 1 — p3 untyped drops out
-    assert(hist == Map(3L -> 1L, 1L -> 2L))
-    // default = direct type lookup (reference parity): Staff-typed p2
-    // drops too — only directly-Person-typed p1, p4 count
-    val histDirect = Taxonomy.histogramOnDomain(kb, "speaks", stats)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(histDirect == Map(3L -> 1L, 1L -> 1L))
-    // no declared class → empty histogram (Schema.java:753-755)
-    assert(Taxonomy.histogramOnDomain(kb, "rdf:type", stats).count() == 0)
-  }
-
-  test("histogramOnDomain: non-functional relation routes to the range side") {
-    import spark.implicits._
-    // employs: one company, many employees → inverseFunctionality(=1/4 per
-    // object... ) — objects unique, subjects repeat → count per OBJECT
-    // against the declared range class.
-    val kb = Seq(
-      ("acme", "employs", "p1"), ("acme", "employs", "p2"),
-      ("acme", "employs", "p3"), ("globex", "employs", "p1"),
-      ("p1", "rdf:type", "Person"), ("p2", "rdf:type", "Person"),
-      ("employs", "rdfs:range", "Person"),
-      ("employs", "rdfs:domain", "Company")).toDF("subj", "pred", "obj")
-    val stats = KGStats.compute(kb)
-    assert(stats.functionality("employs") < stats.inverseFunctionality("employs"))
-    val hist = Taxonomy.histogramOnDomain(kb, "employs", stats)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // p1: 2 employers, p2: 1 — p3 untyped drops out
-    assert(hist == Map(2L -> 1L, 1L -> 1L))
   }
 
   test("rule sink: reference column order, deterministic rows") {
@@ -378,61 +280,6 @@ class MiscOpsSpec extends AnyFunSuite {
         Atom(Var("x"), Const("r2"), Var("z")),
         Atom(Var("z"), Const("r3"), Var("w"))))
     assert(!m.containsSinglePath(branch))
-  }
-
-  test("TypingKB: class/relation entity sets with synthetic inverses (SimpleTypingKB)") {
-    import spark.implicits._
-    val kb = Seq(
-      Triple("a", "rdf:type", "Person"), Triple("b", "rdf:type", "Person"),
-      Triple("a", "rdf:type", "Person"), // duplicate collapses
-      Triple("Person", "rdfs:subClassOf", "Agent"),
-      Triple("a", "knows", "b"), Triple("a", "knows", "c")).toDF()
-    val t = TypingKB.fromTriples(kb)
-    assert(TypingKB.classSizes(t).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      == Map("Person" -> 2L))
-    val rs = TypingKB.relationSizes(t).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rs == Map("knows" -> 1L, "knows-1" -> 2L)) // subj set {a}; obj set {b,c}
-    assert(t.subClassOf.count() == 1)
-    val ov = TypingKB.classRelationOverlap(t).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(ov == Map(("Person", "knows") -> 1L, ("Person", "knows-1") -> 1L))
-  }
-
-  test("LangFacts: exactly-one-@ objects spawn label/lang facts (MultilingualKB)") {
-    import spark.implicits._
-    val kb = Seq(
-      Triple("x", "label", "Paris@fr"),
-      Triple("y", "label", "no-tag"),
-      Triple("z", "label", "a@b@c"), // two @ — untouched (split length 3)
-      Triple("w", "label", "@en")    // empty label — still length-2 split
-    ).toDF()
-    val out = LangFacts.splitLangLiterals(kb).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(out == Set(
-      ("x", "label", "Paris@fr"), ("y", "label", "no-tag"),
-      ("z", "label", "a@b@c"), ("w", "label", "@en"),
-      ("Paris@fr", "<label>", "Paris"), ("Paris@fr", "<lang>", "fr"),
-      ("@en", "<label>", ""), ("@en", "<lang>", "en")))
-  }
-
-  test("KBDelta: set-semantics apply + incremental stats refresh is exact") {
-    import spark.implicits._
-    val kb = Seq(
-      Triple("a", "r1", "x"), Triple("b", "r1", "x"), Triple("c", "r2", "y"),
-      Triple("d", "r3", "z")).toDF()
-    val dels = Seq(Triple("b", "r1", "x"), Triple("d", "r3", "z")).toDF()
-    val adds = Seq(Triple("e", "r1", "w"), Triple("a", "r1", "x"), // re-add existing: set semantics
-      Triple("f", "r4", "q")).toDF()
-    val next = KBDelta(kb, adds, dels)
-    val got = next.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(got == Set(("a", "r1", "x"), ("c", "r2", "y"),
-      ("e", "r1", "w"), ("f", "r4", "q")))
-    // incremental refresh touches r1/r3/r4 only, yet equals full recompute
-    val refreshed = KBDelta.refreshStats(KGStats.compute(kb), next, adds, dels)
-    val full      = KGStats.compute(next)
-    assert(refreshed.relations == full.relations)
-    assert(refreshed.totalFacts == full.totalFacts)
-    assert(!refreshed.relations.contains("r3")) // fully-deleted relation drops out
   }
 
   test("rewriteProjectionQuery parity: type-I dup-relation atom dropped, counts unchanged (DMA:538-586)") {

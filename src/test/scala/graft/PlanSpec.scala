@@ -54,14 +54,15 @@ class PlanSpec extends AnyFunSuite {
     val docs     = Corpus.generate(spark, 200, 50).toDF()
     val mentions = MentionDetect.mentions(docs)
     val aliasMap = graft.pipeline.Canonicalize.aliasMap(mentions)
-    val p        = plan(LinkScore.link(mentions, aliasMap))
+    val dict     = LinkScore.aliasDictionary(LinkScore.bestCandidates(aliasMap))
+    val p        = plan(LinkScore.linkEncoded(mentions, dict))
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"), s"mention stream must not shuffle-join:\n$p")
   }
 
   test("stats pass is a single hash aggregation inside whole-stage codegen") {
     val t  = pipeline.triples()
-    val df = KGStats.statsDF(t)
+    val df = KGStats.relationCounts(t)
     df.collect() // finalize the adaptive plan so codegen spans are visible
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -119,28 +120,6 @@ class PlanSpec extends AnyFunSuite {
     assert(hinted.select("x", "y", "h").distinct().count() ==
       unhinted.select("x", "y", "h").distinct().count())
     t.unpersist(blocking = false)
-  }
-
-  test("KB delta compiles to an anti-join plus union, no full-table rewrite shuffle") {
-    val t    = pipeline.triples()
-    val dels = t.where(col("pred") === "worksAt")
-    val adds = t.limit(5)
-    val p = plan(KBDelta(t, adds, dels))
-    // set-semantics delete must be a (Broadcast)HashJoin LeftAnti — not a
-    // cartesian or nested loop
-    assert(p.contains("LeftAnti"), s"no anti-join in delta plan:\n$p")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"delta join degenerated:\n$p")
-  }
-
-  test("typing-KB overlap is one entity-keyed join + one aggregation") {
-    val t  = pipeline.triples()
-    val tk = TypingKB.fromTriples(t, typeRelation = "worksAt")
-    val df = TypingKB.classRelationOverlap(tk)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), s"overlap join degenerated:\n$p")
-    assert(p.contains("HashAggregate"), s"no hash aggregation:\n$p")
   }
 
   test("existential dedup: witness variable projected away, distinct image unchanged") {

@@ -224,7 +224,7 @@ class RuleApplySpec extends AnyFunSuite {
   test("LinkPredictCLI: arg parsing, RuleSink TSV round-trip, end-to-end eval (linkprediction.py shape)") {
     import graft.tools.LinkPredictCLI
     val dir = java.nio.file.Files.createTempDirectory("graft-lp").toString
-    def writeTsv(name: String, rows: Seq[(String, String, String)]): Unit = {
+    def writeFacts(name: String, rows: Seq[(String, String, String)]): Unit = {
       val w = new java.io.PrintWriter(s"$dir/$name")
       rows.foreach { case (s, p, o) => w.println(s"$s\t$p\t$o") }
       w.close()
@@ -233,14 +233,17 @@ class RuleApplySpec extends AnyFunSuite {
     val works   = people.zipWithIndex.map { case (p, i) => (p, "worksAt", s"co${i % 4}") }
     val located = (0 until 4).map(i => (s"co$i", "locatedIn", s"ci${i % 2}"))
     val lives   = people.zipWithIndex.map { case (p, i) => (p, "livesIn", s"ci${i % 4 % 2}") }
-    writeTsv("train.tsv", works ++ located ++ lives.drop(4))
-    writeTsv("valid.tsv", lives.slice(3, 4))
-    writeTsv("test.tsv", lives.take(3))
-    // rules file = this engine's own mined-rule TSV format (RuleSink)
-    RuleSink.writeTsv(spark, Seq(ScoredRule(livesRule,
-      support = 8, headCoverage = 1.0, stdConfidence = 1.0,
-      pcaConfidence = 1.0, bodySize = 8, pcaBodySize = 8,
-      functionalVariable = "?x")), s"$dir/rules")
+    writeFacts("train.tsv", works ++ located ++ lives.drop(4))
+    writeFacts("valid.tsv", lives.slice(3, 4))
+    writeFacts("test.tsv", lives.take(3))
+    // rules file = this engine's own mined-rule TSV format, written the
+    // way MineCLI writes it (RuleSink)
+    RuleSink.toDF(spark, Seq(ScoredRule(livesRule,
+        support = 8, headCoverage = 1.0, stdConfidence = 1.0,
+        pcaConfidence = 1.0, bodySize = 8, pcaBodySize = 8,
+        functionalVariable = "?x")))
+      .coalesce(1).write.mode("overwrite")
+      .option("sep", "\t").option("header", "true").csv(s"$dir/rules")
     val a = LinkPredictCLI.parse(Seq(dir, s"$dir/rules", "-agg", "max"))
     assert(a.trainPath == s"$dir/train.tsv" && a.cm == "pca")
     val rules = LinkPredictCLI.loadRules(spark, s"$dir/rules", "pca")
@@ -253,7 +256,7 @@ class RuleApplySpec extends AnyFunSuite {
     assert(ev("tail") == ((1.0, 3L, 3L)))
     assert(ev("head") == ((1.0, 3L, 3L)))
     // plain-text rule lines load too (conf defaults to 1.0)
-    writeTsv("plain.tsv", Seq.empty)
+    writeFacts("plain.tsv", Seq.empty)
     val w = new java.io.PrintWriter(s"$dir/plain.txt")
     w.println("?x worksAt ?t ?t locatedIn ?c => ?x livesIn ?c\t0.75")
     w.close()
@@ -262,7 +265,7 @@ class RuleApplySpec extends AnyFunSuite {
     // an empty valid.tsv is a split with no valid facts: lives(3) becomes
     // a head candidate for ci1, tied with the target p01 and ordered
     // after it, so every rank stays 1
-    writeTsv("valid.tsv", Seq.empty)
+    writeFacts("valid.tsv", Seq.empty)
     val noValid = LinkPredictCLI.run(spark, a).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(5), r.getLong(6))).toMap
     assert(noValid("tail") == ((1.0, 3L, 3L)) && noValid("head") == ((1.0, 3L, 3L)))
@@ -308,18 +311,18 @@ class RuleApplySpec extends AnyFunSuite {
   test("LinkPredictCLI: -o dump derives from preds — maxplus dumps the max, only non-train rows (ADVICE r4)") {
     import graft.tools.LinkPredictCLI
     val dir = java.nio.file.Files.createTempDirectory("graft-lp-out").toString
-    def writeTsv(name: String, rows: Seq[(String, String, String)]): Unit = {
+    def writeFacts(name: String, rows: Seq[(String, String, String)]): Unit = {
       val w = new java.io.PrintWriter(s"$dir/$name")
       rows.foreach { case (s, p, o) => w.println(s"$s\t$p\t$o") }
       w.close()
     }
     // ada is predicted by BOTH rules (vector [0.9, 0.4]) and is NOT a
     // train fact; bob's prediction IS a train fact → excluded from -o
-    writeTsv("train.tsv", Seq(
+    writeFacts("train.tsv", Seq(
       ("ada", "worksAt", "acme"), ("acme", "locatedIn", "paris"),
       ("ada", "bornIn", "paris"),
       ("bob", "bornIn", "tokyo"), ("bob", "livesIn", "tokyo")))
-    writeTsv("test.tsv", Seq(("ada", "livesIn", "paris")))
+    writeFacts("test.tsv", Seq(("ada", "livesIn", "paris")))
     val w = new java.io.PrintWriter(s"$dir/rules.txt")
     w.println("?x worksAt ?t ?t locatedIn ?c => ?x livesIn ?c\t0.9")
     w.println("?x bornIn ?c => ?x livesIn ?c\t0.4")
