@@ -23,15 +23,6 @@ object Dictionary {
 
   val Partitions = 64
 
-  /** (term, id) with id = 1-based rank of term in sorted vocab order. */
-  def build(triples: DataFrame): DataFrame = {
-    val terms = triples.select(col("subj").as("term"))
-      .union(triples.select(col("pred")))
-      .union(triples.select(col("obj")))
-      .distinct()
-    sortedRanks(terms, "term", "id")
-  }
-
   /** Dense 1-based sorted ranks over a distinct one-column vocabulary —
     * output-identical to `row_number() OVER (ORDER BY column)` but with
     * bounded window partitions (range-partition → local rank → tiny
@@ -44,8 +35,8 @@ object Dictionary {
     *
     * The vocabulary is localCheckpoint'd first: range SAMPLING is its own
     * pass over the input, so an uncheckpointed vocab derived from a large
-    * scan (the 3-column KB union here, the CC-derived alias map in the
-    * pipeline) would be recomputed once for the sampler and once for the
+    * scan (the CC-derived alias map of the pipeline, the namespaces of an
+    * RDF load) would be recomputed once for the sampler and once for the
     * shuffle — on a 100-TB KB that is one full scan saved per build. */
   def sortedRanks(vocab: DataFrame, column: String, out: String): DataFrame = {
     // SECOND checkpoint AFTER the range exchange: the counts collect and
@@ -70,25 +61,5 @@ object Dictionary {
       .toDF("pid", "offset")
     local.join(broadcast(offsetDF), "pid")
       .select(col(column), (col("offset") + col("local_rank")).as(out))
-  }
-
-  /** triples → (subj_id, pred_id, obj_id); dictionary joins are
-    * broadcast below the threshold, shuffle-hash above. */
-  def encode(triples: DataFrame, dict: DataFrame): DataFrame = {
-    def side(c: String) = dict.select(col("term").as(c), col("id").as(s"${c}_id"))
-    triples
-      .join(side("subj"), "subj")
-      .join(side("pred"), "pred")
-      .join(side("obj"), "obj")
-      .select("subj_id", "pred_id", "obj_id")
-  }
-
-  def decode(encoded: DataFrame, dict: DataFrame): DataFrame = {
-    def side(c: String) = dict.select(col("id").as(s"${c}_id"), col("term").as(c))
-    encoded
-      .join(side("subj"), "subj_id")
-      .join(side("pred"), "pred_id")
-      .join(side("obj"), "obj_id")
-      .select("subj", "pred", "obj")
   }
 }

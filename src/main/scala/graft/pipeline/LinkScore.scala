@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
  * `max_by(canonical, struct(score, canonical))` aggregation — no window
  * shuffle-sort needed.
  *
- * The alias→canonical table is vocabulary-sized, so both resolution
- * joins are explicitly `broadcast()` — at 10¹² mentions this is the
- * difference between two map-side joins and two full shuffles.
+ * The alias→canonical table is vocabulary-sized, so while it fits the
+ * driver regime ([[graft.plans.DriverRegime]]) both resolution joins are
+ * explicitly `broadcast()` — at 10¹² mentions this is the difference
+ * between two map-side joins and two full shuffles.
  */
 object LinkScore {
 
@@ -62,9 +63,8 @@ object LinkScore {
    * the fact rows). One row per alias; `select(entity_id, canonical)
    * .distinct()` is the decode side.
    *
-   * `best` is materialized once and probed with one bounded collect
-   * (`limit(Ceiling + 1)`), which picks one of two regimes with the same
-   * output:
+   * `best` is materialized once and one [[graft.plans.DriverRegime.probe]]
+   * picks one of two regimes with the same output:
    * - at most [[graft.plans.DriverRegime.Ceiling]] aliases: the driver
    *   sorts the distinct canonicals in Spark's binary UTF-8 order (the
    *   order of `row_number() OVER (ORDER BY canonical)`), ranks them from
@@ -82,18 +82,19 @@ object LinkScore {
     * can force the distributed regime (`driverThreshold = 0`). */
   private[pipeline] def aliasDictionary(best: DataFrame, driverThreshold: Int): DataFrame = {
     val pairs = best.select(col("alias"), col("canonical")).localCheckpoint(true)
-    val probe = pairs.limit(driverThreshold + 1).collect()
-    if (probe.length <= driverThreshold) {
-      val spark = best.sparkSession
-      import spark.implicits._
-      val ids = DriverRegime.sortUtf8(probe.map(_.getString(1)).distinct)
-        .iterator.zipWithIndex.map { case (c, i) => c -> (i + 1L) }.toMap
-      probe.toSeq.map { r => (r.getString(0), r.getString(1), ids(r.getString(1))) }
-        .toDF("alias", "canonical", "entity_id")
-        .coalesce(1)
-    } else
-      pairs.join(entityDictionary(pairs), "canonical")
-        .select(col("alias"), col("canonical"), col("entity_id"))
+    DriverRegime.probe(pairs, driverThreshold) match {
+      case Some(rows) =>
+        val spark = best.sparkSession
+        import spark.implicits._
+        val ids = DriverRegime.sortUtf8(rows.map(_.getString(1)).distinct)
+          .iterator.zipWithIndex.map { case (c, i) => c -> (i + 1L) }.toMap
+        rows.toSeq.map { r => (r.getString(0), r.getString(1), ids(r.getString(1))) }
+          .toDF("alias", "canonical", "entity_id")
+          .coalesce(1)
+      case None =>
+        pairs.join(entityDictionary(pairs), "canonical")
+          .select(col("alias"), col("canonical"), col("entity_id"))
+    }
   }
 
   /**
@@ -111,9 +112,10 @@ object LinkScore {
    */
   def linkEncoded(mentions: DataFrame, aliasDict: DataFrame,
       broadcastDict: Boolean = true): DataFrame = {
-    // broadcastDict: the caller's size gate (Pipeline.dictFitsBroadcast)
-    // — an unconditional hint would force a billions-row dictionary onto
-    // the driver; ungated, Catalyst/AQE picks the join strategy
+    // broadcastDict: the caller's regime choice (Pipeline.run broadcasts
+    // iff the catalog's row count DriverRegime.fits) — an unconditional
+    // hint would collect a billions-row dictionary on the driver; without
+    // it, Catalyst/AQE picks the join strategy
     val hint: DataFrame => DataFrame = if (broadcastDict) broadcast else identity
     val subj = aliasDict.select(col("alias").as("subj_alias"),
       col("entity_id").as("subj_id"), col("canonical").as("subj"))

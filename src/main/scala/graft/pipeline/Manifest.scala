@@ -83,43 +83,37 @@ object Manifest {
     } finally pool.shutdown()
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def write(dir: String, m: StageManifest): Unit = {
-    val parts = m.partitions
-      .map(p => s"""{"id":${p.id},"rows":${p.rows},"bytes":${p.bytes},"checksum":${p.checksum}}""")
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"stage":"${esc(m.stage)}","input_fingerprint":"${esc(m.inputFingerprint)}",""" +
-        s""""total_rows":${m.totalRows},"global_checksum":${m.globalChecksum},""" +
-        s""""partitions":$parts,"complete":${m.complete}}"""
+    val json = Json.createObjectNode()
+      .put("stage", m.stage).put("input_fingerprint", m.inputFingerprint)
+      .put("total_rows", m.totalRows).put("global_checksum", m.globalChecksum)
+    val parts = json.putArray("partitions")
+    m.partitions.foreach(p => parts.addObject()
+      .put("id", p.id).put("rows", p.rows).put("bytes", p.bytes).put("checksum", p.checksum))
+    json.put("complete", m.complete)
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(dir, "_manifest.json.tmp")
-    Files.writeString(tmp, json)
+    Files.writeString(tmp, Json.writeValueAsString(json))
     Files.move(tmp, Paths.get(dir, "_manifest.json"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Minimal field extraction — enough to decide skip/recompute. */
+  /** The fields that decide skip/recompute (per-file stats are not read
+    * back); `None` without a manifest or when it does not parse. */
   def read(dir: String): Option[StageManifest] = {
     val p = Paths.get(dir, "_manifest.json")
     if (!Files.exists(p)) return None
-    val s = Files.readString(p)
-    def str(k: String) =
-      s"""\"$k\":\"([^\"]*)\"""".r.findFirstMatchIn(s).map(_.group(1))
-    def lng(k: String) =
-      s"""\"$k\":(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
+    val j = try Json.readTree(Files.readString(p)) catch {
+      case _: com.fasterxml.jackson.core.JacksonException => return None
+    }
+    def field(k: String) = Option(j.get(k))
     for {
-      stage <- str("stage")
-      fp    <- str("input_fingerprint")
-      rows  <- lng("total_rows")
-    } yield StageManifest(stage, fp, rows, lng("global_checksum").getOrElse(0L),
-      Nil, s.contains("\"complete\":true"))
+      stage <- field("stage").map(_.asText)
+      fp    <- field("input_fingerprint").map(_.asText)
+      rows  <- field("total_rows").map(_.asLong)
+    } yield StageManifest(stage, fp, rows, field("global_checksum").fold(0L)(_.asLong),
+      Nil, field("complete").exists(_.asBoolean))
   }
 }

@@ -24,14 +24,19 @@ import org.apache.spark.sql.types.StructType
  *    the on-disk layout stays bucketed by subject hash (directory
  *    partition column `bucket`), which later rule-quality joins prune on;
  *  - AQE (adaptive + skew-join) is expected on in the session (Sessions);
- *  - the alias/entity dictionary joins are explicitly broadcast ONLY
- *    below a size gate ([[Pipeline.DictBroadcastMaxBytes]], measured on
- *    the written stage's parquet bytes): at 10¹² docs the canonical
- *    vocabulary can itself be billions of rows, and an unconditional
- *    `broadcast()` hint would OOM the driver exactly when the data gets
- *    interesting. Above the gate the join is left to Catalyst/AQE
- *    (shuffle-hash of dictionary vs mention stream) — slower, but it
- *    completes; the encoded-long payload keeps that shuffle narrow.
+ *  - every vocabulary-sized choice follows one rule,
+ *    [[graft.plans.DriverRegime]]: the alias map, the entity ids and the
+ *    entity catalog finish on the driver while their row count
+ *    [[graft.plans.DriverRegime.fits]], and run as distributed rounds
+ *    above it;
+ *  - the alias/entity dictionary joins (link and decode) are explicitly
+ *    broadcast ONLY while the `alias_map` stage's row count fits: a
+ *    broadcast collects its build side on the driver, which is what the
+ *    ceiling bounds, and at 10¹² docs the canonical vocabulary can itself
+ *    be billions of rows. Above the ceiling the join is left to
+ *    Catalyst/AQE (shuffle-hash of dictionary vs mention stream) —
+ *    slower, but it completes; the encoded-long payload keeps that
+ *    shuffle narrow.
  *
  * Reads decode on the fly ([[materialized]]) and the decoded view is a
  * per-run artifact: built on first use, kept until the next [[run]]. When
@@ -58,10 +63,12 @@ final class Pipeline(
   /** Run one resumable stage: skip when a complete manifest matches the
     * input fingerprint, else compute → write parquet → hand the manifest
     * write to `submitManifest`. Either way the stage is read back with its
-    * declared `schema`, so the read-back starts no schema-inference job. */
+    * declared `schema`, so the read-back starts no schema-inference job.
+    * Returns the read-back and the stage's row count (the manifest's when
+    * skipped, the one observed during the write when computed). */
   private def stage(name: String, schema: StructType, inputFp0: String,
       submitManifest: Runnable => Unit, partitionCols: Seq[String] = Nil)(
-      compute: => DataFrame): DataFrame = {
+      compute: => DataFrame): (DataFrame, Long) = {
     // the fingerprint carries the on-disk LAYOUT version alongside the
     // input identity: a workDir written by an older stage layout (e.g.
     // the pre-entity-id triples schema) must recompute, not resume into
@@ -71,7 +78,7 @@ final class Pipeline(
     Manifest.read(dir) match {
       case Some(m) if m.complete && m.inputFingerprint == inputFp =>
         runsSkipped ::= name
-        spark.read.schema(schema).parquet(dir)
+        (spark.read.schema(schema).parquet(dir), m.totalRows)
       case _ =>
         runsExecuted ::= name
         val df = compute
@@ -95,7 +102,7 @@ final class Pipeline(
           globalChecksum = checksum,
           partitions = Manifest.footerStats(dir, hconf),
           complete = true)))
-        spark.read.schema(schema).parquet(dir)
+        (spark.read.schema(schema).parquet(dir), rows)
     }
   }
 
@@ -135,7 +142,7 @@ final class Pipeline(
     // must not resume into the old graph
     val docsFp = inputFp.getOrElse(Manifest.fingerprint(docsDF))
 
-    val mentions = stage("mentions", Pipeline.MentionsSchema, docsFp, submitManifest)(
+    val (mentions, _) = stage("mentions", Pipeline.MentionsSchema, docsFp, submitManifest)(
       MentionDetect.mentions(docsDF))
 
     // downstream stages are deterministic functions of the docs input, so
@@ -150,21 +157,19 @@ final class Pipeline(
     // so the decode catalog must survive with the table. One stage, not
     // three: each extra vocabulary-sized stage costs fixed write+manifest
     // +read latency that does not shrink with cores. Canonicalization and
-    // id assignment each pick a regime from one bounded probe of their
-    // input: up to DriverRegime.Ceiling rows they finish on the driver
-    // (union-find; sorted ranks) and the catalog is written as ONE
-    // parquet file, above it they run as distributed rounds (star CC;
-    // Dictionary.sortedRanks). Same rows and ids either way.
-    val aliasFp   = docsFp + "|aliases"
-    val aliasDict = stage("alias_map", Pipeline.AliasMapSchema, aliasFp, submitManifest) {
-      LinkScore.aliasDictionary(
-        LinkScore.bestCandidates(Canonicalize.aliasMap(mentions)))
-    }
+    // id assignment each pick their regime with DriverRegime.probe; same
+    // rows and ids either way.
+    val aliasFp = docsFp + "|aliases"
+    val (aliasDict, aliasRows) =
+      stage("alias_map", Pipeline.AliasMapSchema, aliasFp, submitManifest) {
+        LinkScore.aliasDictionary(
+          LinkScore.bestCandidates(Canonicalize.aliasMap(mentions)))
+      }
 
     // link scoring is fused into the materialize stage: the linked stream
     // is cheap to recompute from (mentions, alias_map) — persisting it
     // would double the heaviest I/O for no resume value
-    val out = stage("triples", Pipeline.TriplesSchema, docsFp + "|" + aliasFp,
+    val (out, _) = stage("triples", Pipeline.TriplesSchema, docsFp + "|" + aliasFp,
         submitManifest, partitionCols = Seq("bucket")) {
       // The materialize exchange is the pipeline's dominant shuffle and
       // this VM (like any node) is bandwidth-bound on row churn: subject
@@ -179,7 +184,7 @@ final class Pipeline(
       // after the exchange so the dynamic-partition writer reuses the
       // sort.
       LinkScore.linkEncoded(mentions, aliasDict,
-        broadcastDict = dictFitsBroadcast("alias_map"))
+        broadcastDict = DriverRegime.fits(aliasRows))
         .withColumn("bucket", pmod(xxhash64(col("subj")), lit(nBuckets)).cast("int"))
         .select(col("doc_id").as("src_doc"), col("span_idx").as("src_span"),
           col("subj_id"), col("pred"), col("obj_id"), col("bucket"))
@@ -208,7 +213,7 @@ final class Pipeline(
     *    local relation broadcast into both joins — a query then starts no
     *    catalog scan and no `distinct` shuffle;
     *  - otherwise, or without a manifest: the catalog stays a parquet scan
-    *    + `distinct`, broadcast only below [[Pipeline.DictBroadcastMaxBytes]]. */
+    *    + `distinct` with no join hint, and Catalyst/AQE choose the joins. */
   def materialized(): DataFrame = synchronized {
     view.getOrElse {
       val v = decoded(DriverRegime.Ceiling)
@@ -224,11 +229,13 @@ final class Pipeline(
     val catalogDir = stageDir("alias_map")
     val scan = spark.read.schema(Pipeline.AliasMapSchema).parquet(catalogDir)
       .select(col("entity_id"), col("canonical"))
-    val (entities, fits) =
-      if (Manifest.read(catalogDir).exists(_.totalRows <= driverThreshold)) {
+    val fits = Manifest.read(catalogDir)
+      .exists(m => DriverRegime.fits(m.totalRows, driverThreshold))
+    val entities =
+      if (fits) {
         val rows = scan.collect().distinct
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), scan.schema), true)
-      } else (scan.distinct(), dictFitsBroadcast("alias_map"))
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), scan.schema)
+      } else scan.distinct()
     val hint: DataFrame => DataFrame = if (fits) broadcast else identity
     spark.read.schema(Pipeline.TriplesSchema).parquet(stageDir("triples"))
       .join(hint(entities.select(col("entity_id").as("subj_id"),
@@ -237,19 +244,6 @@ final class Pipeline(
         col("canonical").as("obj"))), "obj_id")
       .select(col("subj"), col("pred"), col("obj"),
         col("src_doc"), col("src_span"), col("bucket"))
-  }
-
-  /** Size gate for the explicit dictionary-broadcast hints: the written
-    * stage's parquet bytes (cheap driver listing of an already-local
-    * metadata view — no data pass) against
-    * [[Pipeline.DictBroadcastMaxBytes]]. A missing dir (stage not yet
-    * written) gates TRUE — it only happens at test scale. */
-  private def dictFitsBroadcast(stage: String): Boolean = {
-    val p  = new org.apache.hadoop.fs.Path(stageDir(stage))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    !fs.exists(p) ||
-      fs.listStatus(p).filter(_.isFile).map(_.getLen).sum <=
-        Pipeline.DictBroadcastMaxBytes
   }
 
   /** The emitted graph as a plain (subj, pred, obj) KB for rule mining. */
@@ -276,16 +270,6 @@ object Pipeline {
     * `bucket` directory partition column included. */
   val TriplesSchema: StructType = StructType.fromDDL(
     "src_doc STRING, src_span INT, subj_id BIGINT, pred STRING, obj_id BIGINT, bucket INT")
-
-  /** Max written-parquet bytes of the alias/entity dictionary for which
-    * the pipeline still FORCES broadcast joins (above it, Catalyst/AQE
-    * decides — i.e. the dictionary shuffles). 256 MiB compressed ≈ a
-    * low-GB in-memory hash relation: comfortably inside a production
-    * executor/driver budget, far above `autoBroadcastJoinThreshold`'s
-    * conservative 10 MB default — when the alternative is shuffling a
-    * 10¹²-row mention stream, forcing the broadcast is right for every
-    * dictionary that plausibly fits. */
-  val DictBroadcastMaxBytes: Long = 256L << 20
 
   /** log2 of the salt fan-out per bucket in the materialize shuffle:
     * each subject-hash bucket spreads over 2^SaltBits write tasks. */

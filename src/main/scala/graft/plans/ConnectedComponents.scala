@@ -17,37 +17,27 @@ import org.apache.spark.sql.functions._
  * dir; either way the iteration count stays bounded and each round's plan
  * is flat. Skewed star centers (head aliases) are exactly what AQE's
  * skew-join splitting handles; sessions enable it (see graft.Sessions).
+ *
+ * This is the distributed regime of `Canonicalize.aliasMap`; an alias
+ * vocabulary that [[DriverRegime.fits]] never reaches it.
  */
 object ConnectedComponents {
 
   /**
    * @param edges DataFrame with two string columns (`src`, `dst`); treated
    *              as undirected, self-loops ignored.
-   * @param driverThreshold edge count at or below which the component
-   *        computation collapses to a driver-side union-find: one collect
-   *        + one parallelize instead of O(log n) shuffle rounds. The alias
-   *        graph is vocabulary-sized — orders of magnitude smaller than
-   *        the corpus — so in practice this path serves anything below
-   *        ~10⁶ edges and the star rounds serve web-scale vocabularies.
    * @return DataFrame (id, component) covering every node appearing in
    *         `edges`; `component` = minimal reachable id in Spark's binary
-   *         (UTF-8 byte) string order, in both regimes.
+   *         (UTF-8 byte) string order.
    */
-  def run(edges: DataFrame, maxIter: Int = 25,
-      driverThreshold: Long = DriverRegime.Ceiling): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    if (driverThreshold > 0) {
-      // cheap upper-bound probe: limit() avoids a full count on huge inputs
-      val probe = edges.limit((driverThreshold + 1).toInt).count()
-      if (probe <= driverThreshold) return runOnDriver(edges)
-    }
-
     // nodes whose ONLY edges are self-loops would vanish once self-loops
-    // are dropped — keep them (contract: cover every node in `edges`, as
-    // the driver union-find path does). Typically empty; the anti-join at
-    // the end is against this tiny set's own size.
+    // are dropped — keep them (contract: cover every node in `edges`).
+    // Typically empty; the anti-join at the end is against this tiny
+    // set's own size.
     val in = edges.toDF("src", "dst")
     val selfLoopNodes = in.where($"src" === $"dst").select($"src".as("id")).distinct()
 
@@ -110,28 +100,5 @@ object ConnectedComponents {
     val isolated = selfLoopNodes.join(covered, Seq("id"), "left_anti")
       .select($"id", $"id".as("component"))
     covered.union(isolated)
-  }
-
-  /** Driver-side union-find with path compression + union-by-min — the
-    * small-graph fast path (same contract as the distributed rounds, so
-    * "min" is Spark's UTF-8 byte order, the order `least`/`min` use). */
-  private def runOnDriver(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.toDF("src", "dst").as[(String, String)].collect()
-    val parent = scala.collection.mutable.HashMap[String, String]()
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (DriverRegime.utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    val nodes = es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-    nodes.iterator.map(n => (n, find(n))).toSeq.toDF("id", "component")
   }
 }

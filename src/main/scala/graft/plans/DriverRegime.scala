@@ -1,24 +1,45 @@
 package graft.plans
 
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{DataFrame, Row}
 
 /**
- * What the vocabulary-sized stages (alias union-find, connected
- * components, entity-id ranks, the decode catalog of
- * `Pipeline.materialized`) share when they run on the driver instead
- * of as distributed rounds: the size ceiling that picks the regime, and
- * the string order. Both regimes must label and rank identically, so the
- * driver side compares strings the way Spark does — unsigned UTF-8 bytes
+ * The one rule that picks driver-side or distributed work for the
+ * vocabulary-sized stages of KG construction: a stage whose input has at
+ * most [[Ceiling]] rows collects it and finishes on the driver, a larger
+ * one runs as distributed rounds. The rule makes three choices:
+ *  - the alias map (`Canonicalize.aliasMap`): blocking-key union-find on
+ *    the driver, or key contraction + star-round connected components;
+ *  - the entity ids (`LinkScore.aliasDictionary`): a driver sort of the
+ *    canonicals, or `Dictionary.sortedRanks`;
+ *  - the entity catalog (the `alias_map` stage's row count): held on the
+ *    driver as a local relation by `Pipeline.materialized`, and broadcast
+ *    into the link joins of `Pipeline.run` and the decode joins of the
+ *    view; above the ceiling neither side gets a hint, and Catalyst/AQE
+ *    choose the join.
+ *
+ * Both regimes must label and rank identically, so the driver side
+ * compares strings the way Spark does — unsigned UTF-8 bytes
  * (`UTF8String.compareTo`, the order of `ORDER BY`, `min` and `least`),
  * not Java's UTF-16 code units, which disagree once non-BMP text meets
  * U+E000–U+FFFF.
  */
 object DriverRegime {
 
-  /** Row count at or below which a vocabulary-sized stage collects its
-    * input (one bounded `limit(Ceiling + 1).collect()`) and finishes on
-    * the driver. */
+  /** Row count at or below which a vocabulary-sized stage finishes on the
+    * driver. */
   val Ceiling: Int = 1 << 20
+
+  /** Whether `rows` rows fit the driver regime. */
+  def fits(rows: Long, ceiling: Int = Ceiling): Boolean = rows <= ceiling
+
+  /** One bounded collect of `df` (`limit(ceiling + 1)`: at most
+    * `ceiling + 1` rows ever reach the driver): all its rows when they
+    * [[fits]], else `None`. */
+  def probe(df: DataFrame, ceiling: Int = Ceiling): Option[Array[Row]] = {
+    val rows = df.limit(ceiling + 1).collect()
+    if (fits(rows.length, ceiling)) Some(rows) else None
+  }
 
   /** `a < b` in Spark's binary string order. */
   def utf8Lt(a: String, b: String): Boolean =

@@ -191,18 +191,6 @@ class MiscOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](QueryCLI.parseQuery("?nope | ?x r ?y"))
   }
 
-  test("dictionary: dense sorted ids, encode/decode round-trip") {
-    val triples = graft.kb.Fixtures.baseKB(spark)
-    val dict = Dictionary.build(triples)
-    val ids = dict.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // ids are exactly the 1..V ranks of the sorted vocabulary
-    val sortedTerms = ids.keys.toSeq.sorted
-    assert(sortedTerms.zipWithIndex.forall { case (t, i) => ids(t) == i + 1 })
-    val back = Dictionary.decode(Dictionary.encode(triples, dict), dict)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(back == graft.kb.Fixtures.baseFacts.map(t => (t.subj, t.pred, t.obj)).toSet)
-  }
-
   test("type-I confidence upper bounds match hand-computed values") {
     import graft.kb.{Fixtures, KGStats}
     val kb = Fixtures.baseKB(spark).cache()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline._
-import graft.plans.ConnectedComponents
+import graft.plans.{ConnectedComponents, DriverRegime}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -55,34 +55,58 @@ class PipelineSpec extends AnyFunSuite {
   test("connected components: chain graph (worst case for label propagation)") {
     val n = 64
     val edges = (0 until n - 1).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("src", "dst")
-    // force the distributed large-star/small-star path
-    val comp = ConnectedComponents.run(edges, driverThreshold = 0).collect()
+    val comp = ConnectedComponents.run(edges).collect()
     assert(comp.length == n)
     assert(comp.map(_.getString(1)).distinct.toSeq == Seq("n000"))
   }
 
-  test("alias map: driver union-find and distributed CC paths agree") {
-    val docs     = Corpus.generate(spark, 500, 80)
-    val mentions = MentionDetect.mentions(docs.toDF())
-    val drv  = Canonicalize.aliasMap(mentions).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val dist = Canonicalize.aliasMap(mentions, driverThreshold = 0).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(drv == dist)
-    assert(drv.nonEmpty)
+  test("driver regime: probe returns the rows at the ceiling, None one row above it") {
+    for ((ceiling, n) <- Seq(0 -> 0, 0 -> 1, 5 -> 5, 5 -> 6)) {
+      val df = (1 to n).toDF("v")
+      val got = DriverRegime.probe(df, ceiling)
+      assert(got.map(_.map(_.getInt(0)).toSeq.sorted) ==
+        Option.when(n <= ceiling)((1 to n).toSeq), s"ceiling $ceiling, $n rows")
+      assert(DriverRegime.fits(n, ceiling) == got.nonEmpty)
+    }
   }
 
-  test("connected components: driver and distributed paths agree") {
+  test("alias map: driver union-find and distributed CC paths agree") {
+    val corpus = MentionDetect.mentions(Corpus.generate(spark, 500, 80).toDF())
+    // non-BMP next to U+E000-U+FFFF, each in several case and separator forms
+    val bases = Seq("\uFFFF", "\uD83D\uDE00", "\uE000", "\uD83D\uDE00\uFFFF", "\uFFFF\uD83D\uDE00",
+      "Ent", "\u00C9nt")
+    val forms = for (b <- bases; i <- 0 until 3; f <- Seq(s"${b}_$i", s"$b $i", s"${b.toLowerCase}$i"))
+      yield f
+    val adversarial = forms.zip(forms.reverse).toDF("subj_alias", "obj_alias")
+    for (mentions <- Seq(corpus, adversarial)) {
+      val drv  = Canonicalize.aliasMap(mentions).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val dist = Canonicalize.aliasMap(mentions, driverThreshold = 0).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(drv == dist)
+      assert(drv.nonEmpty)
+    }
+  }
+
+  test("connected components: star rounds == label-propagation oracle in UTF-8 order") {
     val rng = new scala.util.Random(7)
     // U+FFFF vs U+1F600: UTF-16 code-unit order and Spark's UTF-8 byte
-    // order (the distributed rounds' least/min) pick different roots
-    val edges = ((1 to 300).map(_ => (s"v${rng.nextInt(120)}", s"v${rng.nextInt(120)}"))
-      .filter { case (a, b) => a != b } :+ ("\uFFFF", "\uD83D\uDE00")).toDF("src", "dst")
-    val drv = ConnectedComponents.run(edges).collect()
+    // order (the rounds' least/min) pick different roots
+    val es = (1 to 300).map(_ => (s"v${rng.nextInt(120)}", s"v${rng.nextInt(120)}"))
+      .filter { case (a, b) => a != b } :+ ("\uFFFF", "\uD83D\uDE00")
+    val got = ConnectedComponents.run(es.toDF("src", "dst")).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val dist = ConnectedComponents.run(edges, driverThreshold = 0).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(drv == dist)
+    // every node takes the least label over its edges until none changes
+    def least(a: String, b: String) = if (DriverRegime.utf8Lt(b, a)) b else a
+    var label = es.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+    var prev  = Map.empty[String, String]
+    while (label != prev) {
+      prev = label
+      label = es.foldLeft(label) { case (l, (a, b)) =>
+        val m = least(l(a), l(b)); l + (a -> m) + (b -> m) }
+    }
+    assert(got == label)
+    assert(got("\uD83D\uDE00") == "\uFFFF")
   }
 
   test("entity dictionary: scalable ranks == global row_number (skewed, multi-partition)") {
@@ -115,7 +139,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(recall == 1.0, s"recall $recall; missing: ${(want -- got).take(5)}")
   }
 
-  test("P/R holds at 20x scale with a 10x vocabulary (distributed-CC regime)") {
+  test("P/R holds at 20x scale with a 10x vocabulary") {
     val docs = Corpus.generate(spark, 20000, 500)
     val dir  = Files.createTempDirectory("graft-pr-big").toString
     val p    = new Pipeline(spark, dir, nBuckets = 8)
@@ -157,7 +181,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** A workDir with all three stages written under the input fingerprint `finishedFp`. */
-  private val finishedFp = "finished:300"
+  private val finishedFp = "finished:300 \"q\" C:\\x\t\u0001"
   private lazy val finishedDir: String = {
     val dir = Files.createTempDirectory("graft-finished").toString
     new Pipeline(spark, dir, nBuckets = 4).run(Corpus.generate(spark, 300, V), Some(finishedFp))
