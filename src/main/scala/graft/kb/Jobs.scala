@@ -45,7 +45,7 @@ private[graft] object Jobs {
     * execution window is shared — a barrier between pools would add a
     * full job-wave of driver/scheduling latency per pool, and the BFS
     * miner runs up to five independent pools per level (fused scoring,
-    * lazy/fallback counts, head sizes, refinement templates,
+    * per-shape fallback counts, head sizes, refinement templates,
     * instantiations). */
   def collectPools(pools: Seq[(Seq[DataFrame], Int)]): IndexedSeq[Seq[Row]] = {
     val chunks = pools.zipWithIndex.flatMap { case ((parts, chunk), pi) =>

@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
 object Ops {
 
   private def vcols(vs: Seq[Var]): Seq[Column] = vs.map(v => col(v.name))
-  private def cd(vs: Seq[Var]): Column =
-    if (vs.size == 1) countDistinct(col(vs.head.name))
-    else countDistinct(struct(vcols(vs): _*))
 
   /** Histogram of values at one variable of a query —
     * KB.countBindings (KB.java:2562-2593). */
@@ -42,7 +39,8 @@ object Ops {
       triples: DataFrame, projAtom: Atom, others: Seq[Atom], v: Var): DataFrame =
     QueryBuilder.distinctableBindings(triples, projAtom +: others,
         (v +: projAtom.vars).map(_.name).toSet, None)
-      .groupBy(col(v.name)).agg(cd(projAtom.vars.distinct).as("cnt"))
+      .groupBy(col(v.name))
+      .agg(QueryBuilder.countDistinctOf(projAtom.vars.distinct).as("cnt"))
 
   /** Distinct `vs` bindings matching `bodyAtoms` but NOT `headAtoms` —
     * the difference family (KB.java:3346-3747), AMIE's negative-example

@@ -249,34 +249,6 @@ object QueryBuilder {
     (dfs.toSeq, kept.toSeq)
   }
 
-  /** Estimated output cardinality of [[distinctableBindings]] for this
-    * conjunction — the same greedy fold the compiler itself uses
-    * (estimates only; callers use it to pick between plan SHAPES, never
-    * to change results). */
-  private[graft] def estimateBindings(atoms: Seq[Atom], st: KGStats,
-      keep: Set[String]): Double = {
-    val e = new Estimator(st)
-    val positive = atoms.filterNot(a => a.isPseudo || a.isMeta)
-    if (positive.isEmpty) return 1.0
-    val occ = atoms.flatMap(_.vars.distinct).groupBy(_.name)
-      .view.mapValues(_.size).toMap
-    def estFor(a: Atom): Double = {
-      val vs   = a.vars.distinct
-      val kept = vs.filter(v => keep(v.name) || occ(v.name) > 1)
-      if (kept.size == vs.size) e.baseEst(a)
-      else e.dedupEst(a, kept.map(_.name).toSet)
-    }
-    val ordered = cardinalityOrder(positive, e, estFor)
-    val bound   = scala.collection.mutable.Set[String](
-      ordered.head.vars.map(_.name): _*)
-    var est = estFor(ordered.head)
-    for (a <- ordered.drop(1)) {
-      est = e.joinedEst(est, a, bound, estFor(a))
-      a.vars.foreach(v => bound += v.name)
-    }
-    est
-  }
-
   /** Broadcast-hint ceiling, in estimated rows (~10-20 MB of triple-ish
     * strings — the standard broadcast envelope). */
   private[graft] val BroadcastMaxRows: Double = 250000.0
@@ -460,10 +432,14 @@ object QueryBuilder {
     val df = distinctableBindings(triples,
       dropRedundantDupAtoms(atoms, vs.map(_.name).toSet),
       vs.map(_.name).toSet, stats)
-    val c  = if (vs.size == 1) countDistinct(col(vs.head.name))
-             else countDistinct(struct(vs.map(v => col(v.name)): _*))
-    df.agg(c.as("n")).collect()(0).getLong(0)
+    df.agg(countDistinctOf(vs).as("n")).collect()(0).getLong(0)
   }
+
+  /** `countDistinct` over the binding columns of `vs`: the column itself
+    * for one variable, their struct for several. */
+  private[graft] def countDistinctOf(vs: Seq[Var]): Column =
+    if (vs.size == 1) countDistinct(col(vs.head.name))
+    else countDistinct(struct(vs.map(v => col(v.name)): _*))
 
   /**
    * rewriteProjectionQuery parity (DefaultMiningAssistant.java:538-586,

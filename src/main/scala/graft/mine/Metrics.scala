@@ -54,10 +54,8 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     val df = QueryBuilder.distinctableBindings(triples,
       QueryBuilder.dropRedundantDupAtoms(atoms, vs.map(_.name).toSet),
       vs.map(_.name).toSet, Some(stats))
-    val c =
-      if (vs.size == 1) countDistinct(col(vs.head.name))
-      else countDistinct(struct(vs.map(v => col(v.name)): _*))
-    df.agg(c.as("n")).select(Jobs.tag(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
+    df.agg(QueryBuilder.countDistinctOf(vs).as("n"))
+      .select(Jobs.tag(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
   }
 
   /** Head size: relation size for a 2-variable head (stats lookup — no
@@ -151,29 +149,17 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     Some(joined.select(Jobs.tag(ruleId).as("__rid"), key, col("__h"), col("__p")))
   }
 
-  /** Bounded distinct count as a 1-row plan: `limit(bound)` over the
-    * distinct projection stops the scan early (the Spark shape of the
-    * reference's countDistinctPairsUpTo, KB.java:3111-3160). bound ≤ 0 ⇒
-    * exact full count. */
-  private def boundedCount(
-      ruleId: Int, kind: String, vs: Seq[Var], atoms: Seq[Atom], bound: Long): DataFrame = {
-    val d   = QueryBuilder.selectDistinct(triples, vs, atoms)
-    val lim = if (bound > 0 && bound < Int.MaxValue) d.limit(bound.toInt) else d
-    lim.agg(count(lit(1)).as("n"))
-      .select(Jobs.tag(ruleId).as("rule_id"), lit(kind).as("kind"), col("n"))
-  }
-
   /** Score a batch of closed rules in a handful of chunked jobs. */
   def scoreAll(rules: Seq[Rule]): Seq[ScoredRule] = {
     if (rules.isEmpty) return Nil
-    val p = planScoring(rules, _.headVars, None, MiningBias.Default)
+    val p = planScoring(rules, _.headVars, MiningBias.Default)
     p.finish(Jobs.collectPools(p.pools))
   }
 
   /**
    * Deferred-execution variant of [[scoreAll]]: returns the three plan
-   * pools (fused one-plan-per-rule scoring, lazy/fallback counts, head
-   * sizes) WITHOUT running them, plus a finisher that assembles the
+   * pools (fused one-plan-per-rule scoring, per-shape fallback counts,
+   * head sizes) WITHOUT running them, plus a finisher that assembles the
    * [[ScoredRule]]s from the pools' collected rows. The miner merges
    * these pools with the refinement-candidate pools of the same BFS
    * level into one shared [[Jobs.collectPools]] submission — the
@@ -182,13 +168,6 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
    *
    * @param countVarsOf support/denominator counting variables per rule
    *                    (the bias's choice — [[MiningBias.countVars]])
-   * @param lazyCfg     early-stop denominators (`lazy` bias,
-   *                    LazyMiningAssistant.java:40-88): (known support by
-   *                    rule index, minStdConfidence, minPcaConfidence).
-   *                    Denominator counts are bounded at
-   *                    `ceil(support/minConf)+1`; a truncated count can
-   *                    only land the confidence below its threshold, so
-   *                    emitted rules keep exact metrics.
    * @param bias        the bias's count constraints (support-only extra
    *                    atoms), output-rule acceptance and supportRatio
    *                    denominator — the seeds-count / existential
@@ -197,11 +176,9 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
   private[mine] def planScoring(
       rules: Seq[Rule],
       countVarsOf: Rule => Seq[Var],
-      lazyCfg: Option[(Int => Option[Long], Double, Double)],
       bias: MiningBias): ScoringPlan = {
 
     val counts       = scala.collection.mutable.Map[Int, (Long, Long, Long)]()
-    val knownSupport = scala.collection.mutable.Map[Int, Long]()
     // open-head rules (existential bias): support counts BOTH head
     // variables but the denominators can only count the body-bound ones —
     // dividing the pair count by a single-variable denominator would let
@@ -219,42 +196,28 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     rules.zipWithIndex.foreach { case (r, i) =>
       val kv = countVarsOf(r)
       val cc = bias.countConstraints(this, r)
-      val lazySupport = lazyCfg.collect {
-        case (sup, minStd, minPca) if (minStd > 0 || minPca > 0) && r.body.nonEmpty =>
-          sup(i)
-      }.flatten
-      lazySupport match {
-        case Some(s) =>
-          val (_, minStd, minPca) = lazyCfg.get
-          knownSupport(i) = s
-          def bnd(minConf: Double) =
-            if (minConf > 0) math.ceil(s / minConf).toLong + 1 else 0L
-          parts += boundedCount(i, "body", kv, r.body, bnd(minStd))
-          parts += boundedCount(i, "pca", kv, pcaAtoms(r), bnd(minPca))
+      fusedPlan(i, r, kv, cc) match {
+        case Some(df) =>
+          fusedBuckets.getOrElseUpdate(kv.size,
+            scala.collection.mutable.ArrayBuffer()) += df
         case None =>
-          fusedPlan(i, r, kv, cc) match {
-            case Some(df) =>
-              fusedBuckets.getOrElseUpdate(kv.size,
-                scala.collection.mutable.ArrayBuffer()) += df
-            case None =>
-              // fallback (head variable not bound by the body: bodyless,
-              // fully-instantiated, or EXISTENTIAL heads): separate aggs.
-              // Denominators count only the body-bound counting variables
-              // — an open head variable is constrained by nothing in a
-              // body-only conjunction (its column does not even exist
-              // there); with no bound count var the denominators stay 0
-              // and the confidences degrade to 0.0, the reference's own
-              // behavior for this shape (ExistentialRulesHeadVariables
-              // MiningAssistant.java:44-57, exception-swallowed).
-              parts += agg1(i, "support", kv, r.atoms ++ cc)
-              val bodyVars = r.realBody.flatMap(_.vars).map(_.name).toSet
-              val dvs      = kv.filter(v => bodyVars(v.name))
-              if (dvs.nonEmpty && r.realBody.nonEmpty) {
-                parts += agg1(i, "body", dvs, r.body)
-                parts += agg1(i, "pca", dvs, pcaAtoms(r))
-                // confidence numerator on the denominators' variable set
-                if (dvs != kv) parts += agg1(i, "suppd", dvs, r.atoms ++ cc)
-              }
+          // fallback (head variable not bound by the body: bodyless,
+          // fully-instantiated, or EXISTENTIAL heads): separate aggs.
+          // Denominators count only the body-bound counting variables
+          // — an open head variable is constrained by nothing in a
+          // body-only conjunction (its column does not even exist
+          // there); with no bound count var the denominators stay 0
+          // and the confidences degrade to 0.0, the reference's own
+          // behavior for this shape (ExistentialRulesHeadVariables
+          // MiningAssistant.java:44-57, exception-swallowed).
+          parts += agg1(i, "support", kv, r.atoms ++ cc)
+          val bodyVars = r.realBody.flatMap(_.vars).map(_.name).toSet
+          val dvs      = kv.filter(v => bodyVars(v.name))
+          if (dvs.nonEmpty && r.realBody.nonEmpty) {
+            parts += agg1(i, "body", dvs, r.body)
+            parts += agg1(i, "pca", dvs, pcaAtoms(r))
+            // confidence numerator on the denominators' variable set
+            if (dvs != kv) parts += agg1(i, "suppd", dvs, r.atoms ++ cc)
           }
       }
     }
@@ -279,7 +242,7 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
       res(1).groupBy(Jobs.tagOf).foreach { case (i, rows) =>
         val m = rows.map(row => row.getString(1) -> row.getLong(2)).toMap
         counts(i) = (
-          knownSupport.getOrElse(i, m.getOrElse("support", 0L)),
+          m.getOrElse("support", 0L),
           m.getOrElse("body", 0L),
           m.getOrElse("pca", 0L))
         m.get("suppd").foreach(confSupport(i) = _)
@@ -340,9 +303,9 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
           if (denom == 0) 0.0 else support.toDouble / denom
         },
         // stdConfUpperBound is a pure stats lookup (zero jobs) — populate
-        // whenever the hard shape applies; the costlier pcaConfUpperBound /
-        // pcaConfEstimation are filled in by the miner when its pruning
-        // passes computed them.
+        // whenever the hard shape applies; pcaConfEstimation is filled in
+        // by the miner when its functionality heuristic computed it, and
+        // pcaConfUpperBound keeps its 0.0 default.
         stdConfUpperBound = stdConfidenceUpperBound(r, support).getOrElse(0.0))
     }
 
@@ -379,40 +342,6 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
       val denom = st.map(s => if (sharedObj) s.distinctSubj else s.distinctObj).getOrElse(0L)
       if (denom == 0) 0.0 else support.toDouble / denom
     }
-
-  /**
-   * PCA-confidence upper bound (MA:1281-1313): drop the body atom that
-   * does not contain the functional head variable, add the existential
-   * head atom unless redundant, and count distinct bindings of the
-   * functional variable over this *relaxed* (cheaper) query.
-   */
-  def pcaConfidenceUpperBound(r: Rule, support: Long): Option[Double] =
-    hardTypeI(r).flatMap { case (a1, a2, sharedObj) =>
-      val projVar = (if (headRelationFunctionalIsSubject(r)) r.head.s else r.head.o) match {
-        case v: Var => v
-        case _      => return None // instantiated head: bound not applicable
-      }
-      val (dropped, remained) =
-        if (!a1.vars.contains(projVar)) (a1, a2)
-        else if (!a2.vars.contains(projVar)) (a2, a1)
-        else return None
-      var easy: List[Atom] = r.body.filterNot(_ == dropped)
-      // hardCaseInfo[1] = the NON-shared position; redundant iff the kept
-      // atom has the head relation and that position is the functional one
-      val differingPosIsSubject = sharedObj
-      val functionalIsSubject   = headRelationFunctionalIsSubject(r)
-      if (remained.p != r.head.p || differingPosIsSubject != functionalIsSubject) {
-        val fresh = freshVar(r)
-        easy = easy :+ (if (functionalIsSubject) r.head.copy(o = fresh)
-                        else r.head.copy(s = fresh))
-      }
-      val denom = QueryBuilder.countDistinctBindings(triples, Seq(projVar), easy)
-      Some(if (denom == 0) 0.0 else support.toDouble / denom)
-    }
-
-  /** Support alone (computeCardinality, DMA:636-655). */
-  def support(r: Rule): Long =
-    QueryBuilder.countDistinctBindings(triples, r.headVars, r.atoms)
 
   /** Overlap tables, built lazily: only the functionality heuristic pays
     * for them (same gating as the reference, AMIE.java:936-944). */

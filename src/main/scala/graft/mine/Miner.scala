@@ -33,14 +33,9 @@ final case class MinerConfig(
     minStdConfidence: Double = 0.0,
     maxDepth: Int = 3,
     enableConstants: Boolean = false,
-    /** type-I confidence upper-bound pruning (MA:988-1023) — skip exact
-      * metric computation for rules whose cheap bound already fails the
-      * thresholds. Pure optimization: never changes emitted rules. */
-    enableConfidenceBounds: Boolean = false,
     /** functionality-heuristic PCA estimation for 3-atom rules
-      * (MA:1127-1202, AMIE+ §6.2.2). Unlike the exact bounds this is an
-      * ESTIMATE and may over-prune — same trade the reference's `-full`
-      * mode makes. */
+      * (MA:1127-1202, AMIE+ §6.2.2). An ESTIMATE that may over-prune —
+      * same trade the reference's `-full` mode makes. */
     enableFunctionalityHeuristic: Boolean = false,
     /** max occurrences of one relation in a rule (recursivity guard,
       * DefaultMiningAssistant.java:212-214). */
@@ -64,9 +59,9 @@ final case class MinerConfig(
       * alone this reproduces the typed assistant's B ∧ is(x,C) ∧ is(y,C')
       * rule space (TypedDefaultMiningAssistant.java:25-80). */
     instantiationTargetRelations: Seq[String] = Nil,
-    /** counting/denominator strategy — the assistant-variant surface
-      * (MiningAssistantFactory.java:33-90): default, oneVar, lazy,
-      * signatured. */
+    /** counting strategy — the assistant-variant surface
+      * (MiningAssistantFactory.java:33-90): default, oneVar, signatured,
+      * … (see [[MiningBias]]). */
     bias: MiningBias = MiningBias.Default)
 
 /**
@@ -133,7 +128,8 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
 
   /** Search node: rule + best PCA confidence among output ancestors
     * (skyline pruning floor, MiningAssistant.java:1212-1272) + the
-    * support measured when the rule was generated (for bound pruning). */
+    * support measured when the rule was generated (read by the
+    * functionality heuristic's PCA estimate). */
   private final case class Node(rule: Rule, ancestorConf: Double, supportHint: Long = -1L)
 
   private def headRel(r: Rule): String =
@@ -155,27 +151,22 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
       QueryBuilder.countDistinctBindings(kb, countVarsOf(seedRule), seedRule.head :: cc))
   }
 
-  /** Per-head-relation count threshold, selected by the pruning metric
-    * (AMIE.java:457-467 getCountThreshold; -pm). */
-  private def supportThreshold(rel: String): Long = config.pruningMetric match {
-    case PruningMetric.Support      => config.minSupport
-    case PruningMetric.HeadCoverage => math.ceil(config.minHeadCoverage * headSizeOf(rel)).toLong
-    case PruningMetric.Both =>
-      math.max(config.minSupport,
-        math.ceil(config.minHeadCoverage * headSizeOf(rel)).toLong)
-  }
-
-  /** Seed-only threshold (AMIEOptions -minis). */
-  private def initialThreshold(rel: String): Long = {
-    val floor = if (config.minInitialSupport >= 0) config.minInitialSupport
-                else config.minSupport
+  /** Per-head-relation count threshold over the support floor `floor`,
+    * selected by the pruning metric (AMIE.java:457-467 getCountThreshold;
+    * -pm). */
+  private def threshold(rel: String, floor: Long): Long = {
+    def hc = math.ceil(config.minHeadCoverage * headSizeOf(rel)).toLong
     config.pruningMetric match {
       case PruningMetric.Support      => floor
-      case PruningMetric.HeadCoverage => math.ceil(config.minHeadCoverage * headSizeOf(rel)).toLong
-      case PruningMetric.Both =>
-        math.max(floor, math.ceil(config.minHeadCoverage * headSizeOf(rel)).toLong)
+      case PruningMetric.HeadCoverage => hc
+      case PruningMetric.Both         => math.max(floor, hc)
     }
   }
+  private def supportThreshold(rel: String): Long = threshold(rel, config.minSupport)
+
+  /** Seed-only threshold (AMIEOptions -minis). */
+  private def initialThreshold(rel: String): Long = threshold(rel,
+    if (config.minInitialSupport >= 0) config.minInitialSupport else config.minSupport)
 
   /** Seed rules `⇒ r(x,y)` for every relation large enough (DMA:81-88);
     * bias-excluded relations (e.g. the schema relations under the
@@ -235,53 +226,32 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
 
     while (level.nonEmpty) {
       // ---- Phase A: score closed rules of this generation ----
-      // optional type-I upper-bound / functionality-heuristic pre-prune: a
-      // cheap bound below the threshold means the exact metrics cannot
-      // pass either. Computed values are kept for the output columns.
+      // optional functionality-heuristic pre-prune (`-optimfh`): an
+      // estimated PCA confidence below the threshold drops the rule
+      // before exact scoring. The estimate is kept for the output column.
       val closedNodes = level.filter(n => bias.acceptForOutput(n.rule))
-      val evals: Seq[(Node, Option[Double], Option[Double], Option[Double])] =
-        closedNodes.map { n =>
-          // no hint, or the bias rescored with extra type atoms (a bound on
-          // the UNconstrained rule does not bound the constrained one)
-          if (n.supportHint < 0 || bias.typeConstraints(n.rule).nonEmpty)
-            (n, None, None, None)
-          else {
-            val stdUB = if (config.enableConfidenceBounds)
-              metrics.stdConfidenceUpperBound(n.rule, n.supportHint) else None
-            val pcaUB = if (config.enableConfidenceBounds)
-              metrics.pcaConfidenceUpperBound(n.rule, n.supportHint) else None
-            val est = if (config.enableFunctionalityHeuristic && config.minPcaConfidence > 0) {
-              if (n.rule.length == 3) metrics.pcaApproximation3(n.rule, n.supportHint)
-              else if (n.rule.length > 3) metrics.pcaApproximationPath(n.rule, n.supportHint)
-              else None
-            } else None
-            (n, stdUB, pcaUB, est)
-          }
-        }
-      val kept = evals.filterNot { case (_, stdUB, pcaUB, est) =>
-        (config.minStdConfidence > 0 && stdUB.exists(_ < config.minStdConfidence)) ||
-        (config.minPcaConfidence > 0 && pcaUB.exists(_ < config.minPcaConfidence)) ||
-        (config.minPcaConfidence > 0 && est.exists(_ < config.minPcaConfidence))
+      val evals: Seq[(Node, Option[Double])] = closedNodes.map { n =>
+        // no hint, or the bias rescored with extra type atoms (an estimate
+        // for the UNconstrained rule does not describe the constrained one)
+        val est =
+          if (!config.enableFunctionalityHeuristic || config.minPcaConfidence <= 0 ||
+              n.supportHint < 0 || bias.typeConstraints(n.rule).nonEmpty) None
+          else if (n.rule.length == 3) metrics.pcaApproximation3(n.rule, n.supportHint)
+          else if (n.rule.length > 3) metrics.pcaApproximationPath(n.rule, n.supportHint)
+          else None
+        (n, est)
+      }
+      val kept = evals.filterNot { case (_, est) =>
+        est.exists(_ < config.minPcaConfidence)
       }
 
       // the signatured bias appends the head relation's domain/range type
       // atoms before scoring AND in the emitted rule
-      // (RelationSignatureDefaultMiningAssistant.java:49-86); its hints no
-      // longer apply (the constraint changes support)
-      val scoreRules = kept.map { case (n, _, _, _) =>
+      // (RelationSignatureDefaultMiningAssistant.java:49-86)
+      val scoreRules = kept.map { case (n, _) =>
         val extra = bias.typeConstraints(n.rule)
         if (extra.isEmpty) n.rule else n.rule.copy(body = n.rule.body ++ extra)
       }
-      val hints: Map[Int, Long] = kept.zipWithIndex.collect {
-        case (((n, _, _, _)), i)
-            if n.supportHint >= 0 && bias.typeConstraints(n.rule).isEmpty =>
-          i -> n.supportHint
-      }.toMap
-      val lazyCfg =
-        if (bias.lazyDenominators) {
-          val lookup: Int => Option[Long] = i => hints.get(i)
-          Some((lookup, config.minStdConfidence, config.minPcaConfidence))
-        } else None
       // ---- One shared job wave for the level ----
       // Phase-A scoring pools and phase-B refinement-candidate pools are
       // submitted through ONE Jobs.collectPools window: the result-
@@ -291,20 +261,19 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
       // The optimistic cost — candidate counts for parents that turn out
       // perfect — is a handful of rules; the saved cost is 3-4 full job
       // waves of driver/scheduling latency per BFS level.
-      val scoringPlan = metrics.planScoring(scoreRules, countVarsOf, lazyCfg, bias)
+      val scoringPlan = metrics.planScoring(scoreRules, countVarsOf, bias)
       val candidates  = level.filter(_.rule.length < config.maxDepth)
       val refinePlan  = planRefine(candidates)
       val pooled = Jobs.collectPools(scoringPlan.pools ++ refinePlan.pools)
       val scoredSeq = scoringPlan.finish(pooled.take(scoringPlan.pools.size))
       val scored: Map[String, ScoredRule] =
-        kept.zip(scoredSeq).map { case ((n, _, pcaUB, est), s) =>
+        kept.zip(scoredSeq).map { case ((n, est), s) =>
           n.rule.canonical -> s.copy(
-            pcaConfUpperBound = pcaUB.getOrElse(s.pcaConfUpperBound),
             pcaConfEstimation = est.getOrElse(s.pcaConfEstimation))
         }.toMap
 
       val outputConf = scala.collection.mutable.Map[String, Double]()
-      for ((n, _, _, _) <- kept) {
+      for ((n, _) <- kept) {
         val s = scored(n.rule.canonical)
         val pass = s.support >= supportThreshold(headRel(n.rule)) &&
           // under -pm support, head coverage is not a pruning criterion
@@ -404,27 +373,13 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
       } templates += ((i, Atom(v1, Var(candCol), v2), false))
     }
 
-    // Chunked jobs: per (template, candidate relation) -> child support.
-    // One plan per template, the atom order chosen by the stats-driven
-    // most-restrictive-first estimator (QueryBuilder.cardinalityOrder):
-    // for the dominant closing templates the template atom is scheduled
-    // BEFORE the weakly-selective body joins, so the plan never builds
-    // the exploded body-only cross section (measured 9M intermediate
-    // rows -> ~40k on the sf0.1 dimension KB). ~TemplateChunk plans are
-    // unioned per job to bound Catalyst planning cost, and chunk jobs
-    // run concurrently (Jobs.collectChunked).
-    // One plan per (rule, operator kind) when the rule's body estimate is
-    // small: the body is scanned ONCE and unpivoted over the templates'
-    // join variables, so a level's candidate counting costs O(#rules)
-    // plans instead of O(#templates) — at local scale the per-plan
-    // driver/stage overhead dominates these tiny jobs (measured
-    // ~0.25 s/plan), and at cluster scale one body scan per rule beats
-    // one per template. Rules whose body-only estimate is large fall back
-    // to one compiler plan per template, where the template atom is
-    // interleaved into the join order (the round-3 fix: the stats order
-    // schedules it before weakly-selective body joins, so the exploded
-    // body-only cross section — measured 9M rows on hub-shaped bodies —
-    // is never materialized).
+    // Per (template, candidate relation) -> child support. Each rule's
+    // body is scanned ONCE per operator kind and unpivoted over its
+    // templates' join variables, so a level's candidate counting costs
+    // one body per rule instead of one plan per template — at local scale
+    // the per-plan driver/stage overhead dominates these tiny jobs
+    // (measured ~0.25 s/plan). The plans are chunked ~TemplateChunk per
+    // job and chunk jobs run concurrently (Jobs.collectChunked).
     val byRule = templates.zipWithIndex
       .groupBy { case ((idx, _, isDangling), _) => (idx, isDangling) }
       .toSeq.sortBy(_._2.head._2)
@@ -433,7 +388,6 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     // join, one final aggregation (vs one exchange per rule)
     val mergedBodies = scala.collection.mutable.LinkedHashMap
       .empty[(Boolean, Int), scala.collection.mutable.ArrayBuffer[DataFrame]]
-    val fallback = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (((idx, isDangling), tpls) <- byRule) {
       val r  = nodes(idx).rule
       val cc = bias.countConstraints(metrics, r)
@@ -442,58 +396,45 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         .filter(_.name != candCol).map(_.name).toSet
       val keepAll = hv.map(_.name).toSet ++
         (tplVars intersect r.allVars.map(_.name).toSet)
-      val bodyEst = QueryBuilder.estimateBindings(r.atoms ++ cc, stats, keepAll)
-      if (bodyEst <= Miner.MergeBodyMaxRows) {
-        val body = QueryBuilder.distinctableBindings(kb, r.atoms ++ cc,
-          keepAll, Some(stats))
-        val ruleVars = r.allVars.map(_.name).toSet
-        val entries = tpls.map { case ((_, tpl, _), tplId) =>
-          if (isDangling) {
-            // existential-dedup form (KB.java:1793-1835): the fresh
-            // variable is counted nowhere, so each template reduces to a
-            // join against the cached (relation, value) index views
-            (tpl.s, tpl.o) match {
-              case (j: Var, f: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
-                struct(Jobs.tag(tplId).as("tid"), lit("s").as("__k1"),
-                  col(j.name).as("__k2"))
-              case (f: Var, j: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
-                struct(Jobs.tag(tplId).as("tid"), lit("o").as("__k1"),
-                  col(j.name).as("__k2"))
-              case other => sys.error(s"malformed dangling template: $other")
-            }
-          } else (tpl.s, tpl.o) match {
-            // closing templates: every ordered variable pair joins the
-            // same fact table, keyed (subj, obj)
-            case (a: Var, b: Var) =>
-              struct(Jobs.tag(tplId).as("tid"), col(a.name).as("__k1"),
-                col(b.name).as("__k2"))
-            case other => sys.error(s"malformed closing template: $other")
+      val body = QueryBuilder.distinctableBindings(kb, r.atoms ++ cc,
+        keepAll, Some(stats))
+      val ruleVars = r.allVars.map(_.name).toSet
+      val entries = tpls.map { case ((_, tpl, _), tplId) =>
+        if (isDangling) {
+          // existential-dedup form (KB.java:1793-1835): the fresh
+          // variable is counted nowhere, so each template reduces to a
+          // join against the cached (relation, value) index views
+          (tpl.s, tpl.o) match {
+            case (j: Var, f: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
+              struct(Jobs.tag(tplId).as("tid"), lit("s").as("__k1"),
+                col(j.name).as("__k2"))
+            case (f: Var, j: Var) if ruleVars(j.name) && !ruleVars(f.name) =>
+              struct(Jobs.tag(tplId).as("tid"), lit("o").as("__k1"),
+                col(j.name).as("__k2"))
+            case other => sys.error(s"malformed dangling template: $other")
           }
+        } else (tpl.s, tpl.o) match {
+          // closing templates: every ordered variable pair joins the
+          // same fact table, keyed (subj, obj)
+          case (a: Var, b: Var) =>
+            struct(Jobs.tag(tplId).as("tid"), col(a.name).as("__k1"),
+              col(b.name).as("__k2"))
+          case other => sys.error(s"malformed closing template: $other")
         }
-        // positional key-field names so bodies of different rules union;
-        // binding columns are projections of triple values (never null),
-        // so countDistinct over the struct equals the per-column count
-        val keyCol =
-          if (hv.size == 1) col(hv.head.name).as("__key")
-          else struct(hv.zipWithIndex.map { case (v, i) =>
-            col(v.name).as(s"k$i") }: _*).as("__key")
-        val unp = body
-          .select(keyCol, explode(array(entries.toSeq: _*)).as("__jv"))
-          .select(col("__key"), col("__jv.tid").as("__tid"),
-            col("__jv.__k1").as("__k1"), col("__jv.__k2").as("__k2"))
-        mergedBodies.getOrElseUpdate((isDangling, hv.size),
-          scala.collection.mutable.ArrayBuffer()) += unp
-      } else fallback ++= tpls.map { case ((_, tpl, _), tplId) =>
-        // big-body fallback: template atom inside the conjunction (stats
-        // order interleaves it; the compiler existentially dedups a
-        // dangling template's fresh variable)
-        val cd = if (hv.size == 1) countDistinct(col(hv.head.name))
-                 else countDistinct(struct(hv.map(v => col(v.name)): _*))
-        QueryBuilder.distinctableBindings(kb, (r.atoms ++ cc) :+ tpl,
-            hv.map(_.name).toSet + candCol, Some(stats))
-          .groupBy(col(candCol)).agg(cd.as("supp"))
-          .select(Jobs.tag(tplId).as("tpl_id"), col(candCol).as("rel"), col("supp"))
       }
+      // positional key-field names so bodies of different rules union;
+      // binding columns are projections of triple values (never null),
+      // so countDistinct over the struct equals the per-column count
+      val keyCol =
+        if (hv.size == 1) col(hv.head.name).as("__key")
+        else struct(hv.zipWithIndex.map { case (v, i) =>
+          col(v.name).as(s"k$i") }: _*).as("__key")
+      val unp = body
+        .select(keyCol, explode(array(entries.toSeq: _*)).as("__jv"))
+        .select(col("__key"), col("__jv.tid").as("__tid"),
+          col("__jv.__k1").as("__k1"), col("__jv.__k2").as("__k2"))
+      mergedBodies.getOrElseUpdate((isDangling, hv.size),
+        scala.collection.mutable.ArrayBuffer()) += unp
     }
     val mergedParts = mergedBodies.toSeq.map { case ((isDangling, _), frames) =>
       val u = frames.reduce(_ unionAll _)
@@ -514,10 +455,9 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         .agg(countDistinct(col("__key")).as("supp"))
         .select(col("__tid").as("tpl_id"), col("__rel").as("rel"), col("supp"))
     }
-    val parts = mergedParts ++ fallback
     val (iTasks, iParts) = planInstantiations(nodes)
     RefinePlan(nodes, templates.toIndexedSeq, iTasks,
-      Seq((parts.toSeq, Miner.TemplateChunk), (iParts, Metrics.JobChunk)))
+      Seq((mergedParts, Miner.TemplateChunk), (iParts, Metrics.JobChunk)))
   }
 
   /** Assemble the level's children from the collected candidate rows:
@@ -596,11 +536,10 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
     if (reguarded.nonEmpty) {
       val parts = reguarded.zipWithIndex.map { case ((r, _), i) =>
         val hv = countVarsOf(r)
-        val cd = if (hv.size == 1) countDistinct(col(hv.head.name))
-                 else countDistinct(struct(hv.map(v => col(v.name)): _*))
         QueryBuilder.distinctableBindings(kb,
             r.atoms ++ bias.countConstraints(metrics, r),
-            hv.map(_.name).toSet, Some(stats)).agg(cd.as("supp"))
+            hv.map(_.name).toSet, Some(stats))
+          .agg(QueryBuilder.countDistinctOf(hv).as("supp"))
           .select(Jobs.tag(i).as("id"), col("supp"))
       }
       val supps = Jobs.collectChunked(parts.toSeq, Metrics.JobChunk)
@@ -689,13 +628,10 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
         }
         case other => other
       }
-      val cd =
-        if (rest.size == 1) countDistinct(col(rest.head.name))
-        else countDistinct(struct(rest.map(h => col(h.name)): _*))
       QueryBuilder.distinctableBindings(kb,
           r.atoms ++ bias.countConstraints(metrics, r),
           (v +: rest).map(_.name).toSet, Some(stats))
-        .groupBy(col(v.name)).agg(cd.as("supp"))
+        .groupBy(col(v.name)).agg(QueryBuilder.countDistinctOf(rest).as("supp"))
         .select(Jobs.tag(taskId).as("task_id"), col(v.name).as("c"), col("supp"))
     }
     (tasks, parts)
@@ -747,12 +683,6 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
 }
 
 object Miner {
-  /** Body-estimate ceiling for the merged one-plan-per-rule candidate
-    * counting: above it, materializing the body without the template atom
-    * risks the hub-shaped cross-section blow-up, so each template gets
-    * its own compiler-ordered plan instead. */
-  val MergeBodyMaxRows: Double = 2e6
-
   /** Candidate-counting templates per chunk job. Measured A/B at sf0.1
     * (round 3, stats-ordered plans): 12 beats 24 and 48 — smaller chunks
     * plan faster and overlap better under the concurrent job pool. */

@@ -9,14 +9,17 @@ import graft.kb.{Const, Var}
  * bias names `oneVar|default|signatured|lazy|lazit`,
  * mining/.../utils/AMIEOptions.java:185-189). A bias changes HOW counts are
  * computed, never the rule algebra: the BFS, operators and thresholds live
- * in [[Miner]]; a bias supplies the counting variables and the denominator
- * strategy.
+ * in [[Miner]]; a bias supplies the counting variables.
  *
- * Two reference variants are intentionally absent:
- *  - `lazit` (LazyIteratorMiningAssistant) differs from `lazy` only in HOW
- *    the bounded count iterates (lazy iterators vs recursive counting);
- *    the bound semantics are identical, so [[MiningBias.Lazy]] covers both
- *    — Spark's `limit` early-stop IS the iterator form.
+ * These reference variants have no bias of their own:
+ *  - `lazy` and `lazit` (LazyMiningAssistant.java:40-88,
+ *    LazyIteratorMiningAssistant) bound the std/PCA denominator counts at
+ *    `ceil(support/minConf)+1`. That saves one KB query per denominator in
+ *    the reference; here a level's support, body and PCA counts already
+ *    run as one fused plan, and a truncated count only ever pushes a
+ *    failing rule further below its threshold, so the emitted rules equal
+ *    the default bias's. `MineCLI` resolves both names to
+ *    [[MiningBias.Default]].
  *  - the variable-order family (DefaultMiningAssistantWithOrder.java:37-59
  *    + variableorder/AppearanceOrder|FunctionalOrder|InverseOrder) picks
  *    which head variable the reference's recursive pair count iterates
@@ -29,13 +32,6 @@ sealed trait MiningBias {
   /** Variables whose distinct bindings define support and the confidence
     * denominators for a rule. */
   def countVars(metrics: Metrics, r: Rule): Seq[Var]
-
-  /** Early-stop denominators (`lazy`/`lazit` biases,
-    * LazyMiningAssistant.java:40-88): bound the std/PCA denominator count
-    * at `ceil(support/minConf)+1` — a truncated count can only push the
-    * confidence below the threshold, so the emitted rule set is identical
-    * to the default bias with exact metrics (output invariance is spec'd). */
-  def lazyDenominators: Boolean = false
 
   /** Relations a bias bans from heads and bodies (the `signatured` bias
     * excludes the schema relations themselves,
@@ -135,13 +131,6 @@ object MiningBias {
         case _      => r.headVars // instantiated functional position
       }
     }
-  }
-
-  /** LazyMiningAssistant: default counting variables, early-stop
-    * denominators. */
-  case object Lazy extends MiningBias {
-    def countVars(metrics: Metrics, r: Rule): Seq[Var] = r.headVars
-    override def lazyDenominators: Boolean = true
   }
 
   /**

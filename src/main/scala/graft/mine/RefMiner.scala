@@ -31,7 +31,7 @@ object RefMiner {
   def mine(triples: Seq[(String, String, String)], config: MinerConfig): Seq[RefScored] = {
     require(!config.enableConstants,
       "RefMiner covers the default-bias subset only")
-    require(!config.enableConfidenceBounds && !config.enableFunctionalityHeuristic,
+    require(!config.enableFunctionalityHeuristic,
       "pruning estimates off: the exact search is the differential target")
 
     val facts = triples.distinct

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  *   spark-submit --class graft.tools.MineCLI graft.jar \
  *     -i /data/facts.tsv -o /out/rules \
- *     -mins 100 -minhc 0.01 -minpca 0.1 -maxad 3 -const -bias lazy
+ *     -mins 100 -minhc 0.01 -minpca 0.1 -maxad 3 -const -bias oneVar
  *
  * Input format by extension (.tsv/.csv, .nt, .ttl, or a parquet dir
  * with subj/pred/obj columns); `-ifmt` overrides. Output is a TSV rule
@@ -43,15 +43,17 @@ object MineCLI {
       |  -minc <x>       min standard confidence         (default 0.0)
       |  -maxad <n>      max rule length in atoms        (default 3)
       |  -const          enable constants (O_I instantiation)
-      |  -bias <b>       default|oneVar|lazy|signatured|anyburl|seedsCount|
+      |  -bias <b>       default|oneVar|signatured|anyburl|seedsCount|
       |                  instantiatedHead|existential|existentialRules|typed
-      |                  (default: default)
+      |                  (default: default; lazy and lazit mine as default:
+      |                  their bounded denominators emit the same rules)
       |  -htr r1,r2      head target relations
       |  -hexr r1,r2     head excluded relations
       |  -bexr r1,r2     body excluded relations
-      |  -optimcb        enable confidence-bound pruning
+      |  -optimcb        accepted, no effect: a level's counts run as one fused
+      |                  plan, so bound pruning saves no query
       |  -optimfh        enable functionality-heuristic PCA estimation
-      |  -full           shorthand for -optimcb -optimfh
+      |  -full           same as -optimfh
       |  -rl <n>         recursivity limit (max same-relation atoms, default 2)
       |  -cores <n>      local-mode core count when not under spark-submit
       |""".stripMargin
@@ -85,10 +87,9 @@ object MineCLI {
       case "-maxad" :: v :: t  => go(t, a.copy(config = a.config.copy(maxDepth = v.toInt)))
       case "-rl" :: v :: t     => go(t, a.copy(config = a.config.copy(maxRelationOccurrence = v.toInt)))
       case "-const" :: t       => go(t, a.copy(config = a.config.copy(enableConstants = true)))
-      case "-optimcb" :: t     => go(t, a.copy(config = a.config.copy(enableConfidenceBounds = true)))
-      case "-optimfh" :: t     => go(t, a.copy(config = a.config.copy(enableFunctionalityHeuristic = true)))
-      case "-full" :: t        => go(t, a.copy(config = a.config.copy(
-        enableConfidenceBounds = true, enableFunctionalityHeuristic = true)))
+      case "-optimcb" :: t     => go(t, a)
+      case ("-optimfh" | "-full") :: t =>
+        go(t, a.copy(config = a.config.copy(enableFunctionalityHeuristic = true)))
       case "-htr" :: v :: t    => go(t, a.copy(config = a.config.copy(headTargetRelations = v.split(",").toSeq)))
       case "-hexr" :: v :: t   => go(t, a.copy(config = a.config.copy(headExcludedRelations = v.split(",").toSet)))
       case "-bexr" :: v :: t   => go(t, a.copy(config = a.config.copy(bodyExcludedRelations = v.split(",").toSet)))
@@ -111,9 +112,10 @@ object MineCLI {
   private[graft] def resolve(
       name: String, kb: DataFrame, config: MinerConfig): (DataFrame, MinerConfig) =
     name match {
-      case "default"          => (kb, config.copy(bias = MiningBias.Default))
+      // lazy/lazit only bound the reference's denominator queries; the
+      // emitted rules are the default bias's (see [[MiningBias]])
+      case "default" | "lazy" | "lazit" => (kb, config.copy(bias = MiningBias.Default))
       case "oneVar"           => (kb, config.copy(bias = MiningBias.OneVar))
-      case "lazy" | "lazit"   => (kb, config.copy(bias = MiningBias.Lazy))
       case "anyburl"          => (kb, config.copy(bias = MiningBias.AnyBurl))
       case "instantiatedHead" => (kb, config.copy(bias = MiningBias.InstantiatedHead))
       case "existential"      => (kb, config.copy(bias = MiningBias.Existential))

@@ -202,13 +202,13 @@ class ExperimentalBiasSpec extends AnyFunSuite {
     val a = MineCLI.parse(Seq("-i", "/x.tsv", "-o", "/out", "-mins", "7",
       "-minis", "9", "-minhc", "0.2", "-minpca", "0.3", "-minc", "0.4",
       "-maxad", "4", "-const", "-bias", "lazy", "-htr", "r1,r2",
-      "-bexr", "r3", "-full", "-rl", "3"))
+      "-bexr", "r3", "-full", "-optimcb", "-rl", "3"))
     assert(a.input == "/x.tsv" && a.output == "/out")
     assert(a.config.minSupport == 7 && a.config.minInitialSupport == 9)
     assert(a.config.minHeadCoverage == 0.2 && a.config.minPcaConfidence == 0.3)
     assert(a.config.minStdConfidence == 0.4 && a.config.maxDepth == 4)
-    assert(a.config.enableConstants && a.config.enableConfidenceBounds &&
-      a.config.enableFunctionalityHeuristic)
+    // -full is -optimfh; -optimcb parses and changes nothing
+    assert(a.config.enableConstants && a.config.enableFunctionalityHeuristic)
     assert(a.config.headTargetRelations == Seq("r1", "r2"))
     assert(a.config.bodyExcludedRelations == Set("r3"))
     assert(a.config.maxRelationOccurrence == 3)
@@ -221,6 +221,7 @@ class ExperimentalBiasSpec extends AnyFunSuite {
     val pmH = MineCLI.parse(Seq("-i", "/x", "-o", "/o", "-pm", "headcoverage"))
     assert(pmH.config.pruningMetric == PruningMetric.HeadCoverage)
     assert(MineCLI.parse(Seq("-i", "/x", "-o", "/o", "-ompca")).omitPca)
+    assert(MineCLI.parse(Seq("-i", "/x", "-o", "/o", "-optimcb")).config == MinerConfig())
   }
 
   test("MineCLI bias resolution: seedsCount augments the KB, typed presets the config") {

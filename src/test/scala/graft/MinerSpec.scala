@@ -43,6 +43,34 @@ class MinerSpec extends AnyFunSuite {
     assert(rules.exists(s => s.rule.head.p == Const("livesIn")))
   }
 
+  test("hub-shaped bodies mine the same rules and metrics as RefMiner") {
+    import spark.implicits._
+    // h and b share one object: h(x,y) ∧ b(z,y) binds 1,500 × 1,600 ≈ 2.4M
+    // (x, y, z) rows, and the closing candidates of that rule count over
+    // the whole cross section
+    val rnd = new scala.util.Random(13)
+    val triples =
+      (0 until 1500).map(i => (s"p$i", "h", "hub")) ++
+      (0 until 60).map(i => (s"p$i", "h", s"o${i % 5}")) ++
+      (0 until 1600).map(j => (s"q$j", "b", "hub")) ++
+      (0 until 1000).map(i => (s"p$i", "r", s"q${rnd.nextInt(1600)}")) ++
+      (0 until 100).map(i => (s"u$i", "r", s"q${rnd.nextInt(1600)}"))
+    val c = MinerConfig(minSupport = 50, minHeadCoverage = 0.01,
+      minPcaConfidence = 0.1, maxDepth = 3, headTargetRelations = Seq("h"))
+    val mined = new Miner(triples.toDF("subj", "pred", "obj"), c).mine()
+      .map(s => (s.rule.canonical, s.support, s.bodySize, s.pcaBodySize,
+        s.headCoverage, s.stdConfidence, s.pcaConfidence)).toSet
+    val ref = RefMiner.mine(triples, c)
+      .map(s => (s.rule.canonical, s.support, s.bodySize, s.pcaBodySize,
+        s.headCoverage, s.stdConfidence, s.pcaConfidence)).toSet
+    assert(mined == ref, s"extra=${mined -- ref}, missing=${ref -- mined}")
+    // the planted path rule h(x,y) ⇐ r(x,z) ∧ b(z,y) closes over the hub
+    val planted = Rule(Atom(Var("x"), Const("h"), Var("y")),
+      List(Atom(Var("x"), Const("r"), Var("z")), Atom(Var("z"), Const("b"), Var("y"))))
+    assert(mined.exists(m => m._1 == planted.canonical && m._2 == 1000),
+      mined.mkString("\n"))
+  }
+
   test("mines worksAt∧isLocatedIn ⇒ livesIn on the base fixture with exact metrics") {
     val rules = new Miner(Fixtures.baseKB(spark), cfg).mine()
     assert(rules.nonEmpty)

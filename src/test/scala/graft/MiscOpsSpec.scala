@@ -202,27 +202,12 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(m.hardTypeI(hard).exists(_._3 == true))
     // std bound: support / #distinct subjects of wasBornIn (= 3)
     assert(m.stdConfidenceUpperBound(hard, 2) == Some(2.0 / 3))
-    // pca bound: drop the non-functional-var atom, add existential head:
-    // denom = |{x : wasBornIn(x,z) ∧ livesIn(x,·)}| = 3
-    assert(m.pcaConfidenceUpperBound(hard, 2) == Some(2.0 / 3))
     // different relations → not a hard shape, bounds not applicable
     val easy = Rule(Atom(Var("x"), Const("livesIn"), Var("c")),
       List(Atom(Var("x"), Const("worksAt"), Var("t")),
         Atom(Var("t"), Const("isLocatedIn"), Var("c"))))
     assert(m.hardTypeI(easy).isEmpty)
     assert(m.stdConfidenceUpperBound(easy, 2).isEmpty)
-  }
-
-  test("bound pruning never changes the mined rule set") {
-    import graft.kb.Fixtures
-    val cfg = MinerConfig(minSupport = 2, minHeadCoverage = 0.1,
-      minPcaConfidence = 0.1, minStdConfidence = 0.1)
-    val without = new Miner(Fixtures.extendedKB(spark), cfg).mine()
-      .map(_.rule.canonical).toSet
-    val withB = new Miner(Fixtures.extendedKB(spark),
-      cfg.copy(enableConfidenceBounds = true)).mine()
-      .map(_.rule.canonical).toSet
-    assert(without == withB)
   }
 
   test("functionality-heuristic PCA approximation matches hand computation") {
