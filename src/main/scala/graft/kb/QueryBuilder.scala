@@ -441,6 +441,16 @@ object QueryBuilder {
     if (vs.size == 1) countDistinct(col(vs.head.name))
     else countDistinct(struct(vs.map(v => col(v.name)): _*))
 
+  /** The binding of `vs` as one positional `__key` column: the column itself
+    * for one variable, a struct of fields `k0, k1, …` for several. The
+    * field names are positional, so the keys of plans over different
+    * variables union; binding columns are projections of triple values
+    * (never null), so `countDistinct(__key)` equals [[countDistinctOf]]. */
+  private[graft] def keyOf(vs: Seq[Var]): Column =
+    if (vs.size == 1) col(vs.head.name).as("__key")
+    else struct(vs.zipWithIndex.map { case (v, i) => col(v.name).as(s"k$i") }: _*)
+      .as("__key")
+
   /**
    * rewriteProjectionQuery parity (DefaultMiningAssistant.java:538-586,
    * driven by AbstractKB.identifyHardQueryTypeI:292-317): in a type-I
@@ -548,16 +558,12 @@ object QueryBuilder {
     }
 
     /** Estimated output of joining a running intermediate of `est` rows
-      * with atom `a`, given the already-bound variable names: selectivity
-      * per bound position is 1/distinct-values-at-that-position
-      * (independence assumed). */
-    def joinedEst(est: Double, a: Atom, bound: collection.Set[String]): Double =
-      joinedEst(est, a, bound, baseEst(a))
-
-    /** As above with the atom side's estimate supplied — the
-      * existentially-deduped form of an atom is (often much) smaller than
-      * [[baseEst]], and the per-bound-position selectivities
-      * 1/distinct-at-position still hold for the deduped table. */
+      * with atom `a` of `rightEst` rows, given the already-bound variable
+      * names: selectivity per bound position is
+      * 1/distinct-values-at-that-position (independence assumed). The
+      * atom side's estimate is supplied because the existentially-deduped
+      * form of an atom is (often much) smaller than [[baseEst]], and the
+      * per-bound-position selectivities still hold for the deduped table. */
     def joinedEst(est: Double, a: Atom, bound: collection.Set[String],
         rightEst: Double): Double = {
       val (_, ds, dob) = relStats(a)

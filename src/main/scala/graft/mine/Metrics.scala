@@ -139,14 +139,12 @@ final class Metrics(triples: DataFrame, stats: KGStats) {
     val (hD, pD)  = if (headSmall) (broadcast(headD), broadcast(pcaD))
                     else (headD, pcaD)
     val joined = base.join(hD, headKeys, "left").join(pD, pcaKeys, "left")
-    // pre-aggregation form: positional key-field names so the frames of
-    // different rules UNION into one shared aggregation per counting
-    // arity (one aggregation per scoring wave instead of one per rule);
+    // pre-aggregation form: positional keys so the frames of different
+    // rules UNION into one shared aggregation per counting arity (one
+    // aggregation per scoring wave instead of one per rule);
     // [[planScoring]] counts the distinct keys and those each marker hits
-    val key = if (hv.size == 1) col(hv.head.name).as("__key")
-              else struct(hv.zipWithIndex.map { case (v, i) =>
-                col(v.name).as(s"k$i") }: _*).as("__key")
-    Some(joined.select(Jobs.tag(ruleId).as("__rid"), key, col("__h"), col("__p")))
+    Some(joined.select(Jobs.tag(ruleId).as("__rid"), QueryBuilder.keyOf(hv),
+      col("__h"), col("__p")))
   }
 
   /** Score a batch of closed rules in a handful of chunked jobs. */

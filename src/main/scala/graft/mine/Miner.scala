@@ -422,15 +422,9 @@ final class Miner(triples: DataFrame, config: MinerConfig = MinerConfig()) {
           case other => sys.error(s"malformed closing template: $other")
         }
       }
-      // positional key-field names so bodies of different rules union;
-      // binding columns are projections of triple values (never null),
-      // so countDistinct over the struct equals the per-column count
-      val keyCol =
-        if (hv.size == 1) col(hv.head.name).as("__key")
-        else struct(hv.zipWithIndex.map { case (v, i) =>
-          col(v.name).as(s"k$i") }: _*).as("__key")
+      // positional keys so bodies of different rules union
       val unp = body
-        .select(keyCol, explode(array(entries.toSeq: _*)).as("__jv"))
+        .select(QueryBuilder.keyOf(hv), explode(array(entries.toSeq: _*)).as("__jv"))
         .select(col("__key"), col("__jv.tid").as("__tid"),
           col("__jv.__k1").as("__k1"), col("__jv.__k2").as("__k2"))
       mergedBodies.getOrElseUpdate((isDangling, hv.size),

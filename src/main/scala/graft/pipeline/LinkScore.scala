@@ -70,7 +70,7 @@ object LinkScore {
    *   order of `row_number() OVER (ORDER BY canonical)`), ranks them from
    *   1 and returns the catalog as a ONE-partition local DataFrame — one
    *   write task and one parquet file, so every later read of the catalog
-   *   (each decode join of a query) is one scan task, not one per
+   *   (the decoded view's catalog collect) is one scan task, not one per
    *   default-parallelism slice;
    * - above it: [[entityDictionary]] over the materialized `best`, joined
    *   back to it.

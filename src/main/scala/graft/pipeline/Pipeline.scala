@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import graft.expressions.{EntityDecode, EntityDictionary}
 import graft.plans.DriverRegime
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -29,22 +31,23 @@ import org.apache.spark.sql.types.StructType
  *    entity catalog finish on the driver while their row count
  *    [[graft.plans.DriverRegime.fits]], and run as distributed rounds
  *    above it;
- *  - the alias/entity dictionary joins (link and decode) are explicitly
- *    broadcast ONLY while the `alias_map` stage's row count fits: a
- *    broadcast collects its build side on the driver, which is what the
- *    ceiling bounds, and at 10¹² docs the canonical vocabulary can itself
- *    be billions of rows. Above the ceiling the join is left to
- *    Catalyst/AQE (shuffle-hash of dictionary vs mention stream) —
- *    slower, but it completes; the encoded-long payload keeps that
- *    shuffle narrow.
+ *  - the alias/entity dictionary reaches executors whole (broadcast link
+ *    joins, the decode dictionary) ONLY while the `alias_map` stage's row
+ *    count fits: a broadcast collects its build side on the driver, which
+ *    is what the ceiling bounds, and at 10¹² docs the canonical
+ *    vocabulary can itself be billions of rows. Above the ceiling the
+ *    joins are left to Catalyst/AQE (shuffle-hash of dictionary vs
+ *    mention stream) — slower, but it completes; the encoded-long
+ *    payload keeps that shuffle narrow.
  *
  * Reads decode on the fly ([[materialized]]) and the decoded view is a
  * per-run artifact: built on first use, kept until the next [[run]]. When
  * the catalog fits ([[graft.plans.DriverRegime]]'s rule, applied to the
- * `alias_map` manifest's row count) it lives on the driver as a local
- * relation broadcast into both decode joins, so a query over the view
- * scans only the encoded `triples` table (AMIE's KB is likewise loaded
- * once and answered from memory).
+ * `alias_map` manifest's row count) it is collected once into a sorted
+ * id → canonical dictionary, broadcast once and probed in the scan's
+ * projection, so a query over the view scans only the encoded `triples`
+ * table and joins nothing to decode (AMIE's KB is likewise loaded once
+ * and answered from memory).
  */
 final class Pipeline(
     spark: SparkSession,
@@ -56,7 +59,7 @@ final class Pipeline(
 
   /** The decoded view of the current run's stages, built on first use by
     * [[materialized]] and dropped by [[run]]. */
-  private var view: Option[DataFrame] = None
+  private var view: Option[(DataFrame, Option[Broadcast[EntityDictionary]])] = None
 
   private def stageDir(name: String) = s"$workDir/$name"
 
@@ -116,7 +119,8 @@ final class Pipeline(
    *                sane choice (Iceberg snapshot-id semantics).
    */
   def run(docs: Dataset[Doc], inputFp: Option[String] = None): DataFrame = {
-    synchronized { view = None }
+    // unpersist, not destroy: a view taken before this run still collects
+    synchronized { view.foreach(_._2.foreach(_.unpersist())); view = None }
     // Manifest writes (footer reads + JSON) are driver-only metadata work —
     // they overlap the NEXT stage's compute instead of serializing after
     // each write job. Crash-safety is unchanged: a stage missing its
@@ -204,46 +208,61 @@ final class Pipeline(
     * the next [[run]], so each query plans against the same DataFrame and
     * pays neither stage listing nor schema inference. Building it reads
     * both stages with the schemas declared in `object Pipeline`, so the
-    * build infers none either. The entity catalog `(entity_id, canonical)`
-    * behind its two decode joins is chosen once, when the view is built:
+    * build infers none either. How the entity catalog `(entity_id,
+    * canonical)` decodes is chosen once, when the view is built:
     *  - the `alias_map` manifest counts at most
     *    [[graft.plans.DriverRegime.Ceiling]] rows (an upper bound on the
     *    distinct entities; no probe needed): one scan job collects the
-    *    catalog, the driver drops duplicate entities, and the result is a
-    *    local relation broadcast into both joins — a query then starts no
-    *    catalog scan and no `distinct` shuffle;
+    *    catalog into a sorted [[graft.expressions.EntityDictionary]],
+    *    shipped in one Spark broadcast, and the scan's projection decodes
+    *    each id with [[graft.expressions.EntityDecode]]; rows whose id is
+    *    not in the catalog are dropped, as the decode join would drop
+    *    them. A query then scans only the encoded `triples` table, with
+    *    no join and no exchange for the decode (AMIE's KB is likewise
+    *    int-encoded and decoded by a dictionary probe);
     *  - otherwise, or without a manifest: the catalog stays a parquet scan
-    *    + `distinct` with no join hint, and Catalyst/AQE choose the joins. */
+    *    + `distinct` joined to the triples on each id, with no join hint,
+    *    and Catalyst/AQE choose the joins. */
   def materialized(): DataFrame = synchronized {
     view.getOrElse {
       val v = decoded(DriverRegime.Ceiling)
       view = Some(v)
       v
-    }
+    }._1
   }
 
-  /** A freshly built decoded view with the catalog's regime ceiling as a
+  /** A freshly built decoded view, with the broadcast dictionary behind it
+    * in the driver regime, and the catalog's regime ceiling as a
     * parameter, so tests can force the distributed catalog
     * (`driverThreshold = 0`). Not memoized. */
-  private[pipeline] def decoded(driverThreshold: Int): DataFrame = {
+  private[pipeline] def decoded(
+      driverThreshold: Int): (DataFrame, Option[Broadcast[EntityDictionary]]) = {
     val catalogDir = stageDir("alias_map")
     val scan = spark.read.schema(Pipeline.AliasMapSchema).parquet(catalogDir)
       .select(col("entity_id"), col("canonical"))
+    val triples = spark.read.schema(Pipeline.TriplesSchema).parquet(stageDir("triples"))
     val fits = Manifest.read(catalogDir)
       .exists(m => DriverRegime.fits(m.totalRows, driverThreshold))
-    val entities =
-      if (fits) {
-        val rows = scan.collect().distinct
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), scan.schema)
-      } else scan.distinct()
-    val hint: DataFrame => DataFrame = if (fits) broadcast else identity
-    spark.read.schema(Pipeline.TriplesSchema).parquet(stageDir("triples"))
-      .join(hint(entities.select(col("entity_id").as("subj_id"),
-        col("canonical").as("subj"))), "subj_id")
-      .join(hint(entities.select(col("entity_id").as("obj_id"),
-        col("canonical").as("obj"))), "obj_id")
-      .select(col("subj"), col("pred"), col("obj"),
-        col("src_doc"), col("src_span"), col("bucket"))
+    if (fits) {
+      val dict = spark.sparkContext.broadcast(EntityDictionary(scan.collect().toSeq
+        .collect { case r if !r.isNullAt(0) => (r.getLong(0), r.getString(1)) }))
+      val view = triples
+        .select(EntityDecode(col("subj_id"), dict).as("subj"), col("pred"),
+          EntityDecode(col("obj_id"), dict).as("obj"),
+          col("src_doc"), col("src_span"), col("bucket"))
+        .where(col("subj").isNotNull && col("obj").isNotNull)
+      (view, Some(dict))
+    } else {
+      val entities = scan.distinct()
+      val view = triples
+        .join(entities.select(col("entity_id").as("subj_id"),
+          col("canonical").as("subj")), "subj_id")
+        .join(entities.select(col("entity_id").as("obj_id"),
+          col("canonical").as("obj")), "obj_id")
+        .select(col("subj"), col("pred"), col("obj"),
+          col("src_doc"), col("src_span"), col("bucket"))
+      (view, None)
+    }
   }
 
   /** The emitted graph as a plain (subj, pred, obj) KB for rule mining. */

@@ -12,11 +12,13 @@ import org.apache.spark.sql.{DataFrame, Row}
  *    the driver, or key contraction + star-round connected components;
  *  - the entity ids (`LinkScore.aliasDictionary`): a driver sort of the
  *    canonicals, or `Dictionary.sortedRanks`;
- *  - the entity catalog (the `alias_map` stage's row count): held on the
- *    driver as a local relation by `Pipeline.materialized`, and broadcast
- *    into the link joins of `Pipeline.run` and the decode joins of the
- *    view; above the ceiling neither side gets a hint, and Catalyst/AQE
- *    choose the join.
+ *  - the entity catalog (the `alias_map` stage's row count): broadcast
+ *    into the link joins of `Pipeline.run`, and collected by
+ *    `Pipeline.materialized` into a sorted id → canonical dictionary that
+ *    is broadcast once per view and decodes ids by lookup
+ *    (`graft.expressions.EntityDecode`); above the ceiling the link joins
+ *    get no hint, the view decodes with two joins against the distributed
+ *    catalog, and Catalyst/AQE choose the joins.
  *
  * Both regimes must label and rank identically, so the driver side
  * compares strings the way Spark does — unsigned UTF-8 bytes

@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.{EntityDecode, EntityDictionary}
 import graft.kb._
 import graft.mine._
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -44,5 +45,22 @@ class CodegenReuseSpec extends AnyFunSuite {
     assert(one.map(Jobs.tagOf).distinct == Seq(0))
     assert(many.map(Jobs.tagOf).toSet == (1 to 6).toSet && many.size == 6 * 8)
     assert(again == 0, s"$again classes compiled for 6 parts of a compiled shape")
+  }
+
+  test("decoding through another entity dictionary compiles no new class") {
+    // the multiplier is inlined into the generated code, so the shape is
+    // one no other test compiles
+    val salt = 1000033L
+    def decode(entries: (Long, String)*): Seq[String] = {
+      val dict = spark.sparkContext.broadcast(EntityDictionary(entries))
+      spark.range(4).repartition(2)
+        .select(EntityDecode(col("id") * salt, dict).as("c"))
+        .where(col("c").isNotNull).collect().map(_.getString(0)).toSeq.sorted
+    }
+    val (a, cold) = compiles(decode(0L -> "x", salt -> "y"))
+    assert(cold > 0, "the salted shape was already compiled")
+    val (b, again) = compiles(decode(2 * salt -> "z", 3 * salt -> "w", 9L -> "v"))
+    assert(a == Seq("x", "y") && b == Seq("w", "z"))
+    assert(again == 0, s"$again classes compiled for a second dictionary")
   }
 }

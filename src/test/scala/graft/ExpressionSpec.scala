@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.RegexpExtractGroups
+import graft.expressions.{EntityDecode, EntityDictionary, RegexpExtractGroups}
 import graft.pipeline.{Corpus, MentionDetect}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,6 +56,31 @@ class ExpressionSpec extends AnyFunSuite {
     val r = df.select(RegexpExtractGroups(col("s"), "^(a)(x)?(b)$").as("g")).collect()(0)
     val g = r.getSeq[String](0)
     assert(g == Seq("a", null, "b"))
+  }
+
+  test("entity_decode: sparse ids decode by lookup, absent and null ids to null, on both paths") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.LongType
+    val dict = spark.sparkContext.broadcast(EntityDictionary(Seq(
+      Long.MaxValue -> "C", 7L -> "A", -5L -> "D", 7L -> "A", 1000003L -> "\uD83D\uDE00")))
+    val ids  = Seq(Some(7L), Some(8L), Some(-5L), None, Some(Long.MaxValue),
+      Some(0L), Some(1000003L), Some(Long.MinValue))
+    val want = Seq("A", null, "D", null, "C", null, "\uD83D\uDE00", null)
+    // the repartition keeps the projection off the driver-side local-relation
+    // shortcut, and without the fallback a generated-code compile error throws
+    val fallback = "spark.sql.codegen.fallback"
+    val prev = spark.conf.get(fallback)
+    val codegen = try {
+      spark.conf.set(fallback, "false")
+      ids.zipWithIndex.toDF("id", "i").repartition(2)
+        .select(col("i"), EntityDecode(col("id"), dict).as("c")).collect()
+        .sortBy(_.getInt(0)).map(_.getString(1)).toSeq
+    } finally spark.conf.set(fallback, prev)
+    assert(codegen == want)
+    val e = EntityDecode(BoundReference(0, LongType, nullable = true), dict)
+    assert(ids.map(i => Option(e.eval(InternalRow(i.getOrElse(null)))).map(_.toString).orNull) == want)
+    intercept[IllegalArgumentException](EntityDictionary(Seq(1L -> "a", 1L -> "b")))
   }
 
   test("mention detection via the fused expression matches the 3x-regexp_extract form") {

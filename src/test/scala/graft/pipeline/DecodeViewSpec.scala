@@ -1,9 +1,12 @@
 package graft.pipeline
 
 import graft.{JobCounter, SparkTestSession}
+import graft.expressions.EntityDecode
 import graft.kb.{Atom, Const, QueryBuilder, Var}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -11,7 +14,7 @@ import java.nio.file.{Files, Paths}
 /** The decoded view of [[Pipeline.materialized]]: the driver-resident and
   * the distributed entity catalog decode to the same rows, the per-run
   * memo follows every run, and a built view costs queries no extra jobs. */
-class DecodeViewSpec extends AnyFunSuite {
+class DecodeViewSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -29,9 +32,19 @@ class DecodeViewSpec extends AnyFunSuite {
   private def oracle(docs: Dataset[Doc]): Seq[(String, String, String)] =
     docs.collect().toSeq.flatMap(Corpus.oracleTriples).sorted
 
-  /** The catalog is held on the driver iff the view's plan has a local relation. */
+  /** The catalog is held on the driver iff the view's plan decodes by lookup. */
   private def driverCatalog(view: DataFrame): Boolean =
-    view.queryExecution.optimizedPlan.collectFirst { case l: LocalRelation => l }.nonEmpty
+    view.queryExecution.optimizedPlan.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[EntityDecode])))
+
+  /** The (collected) view's executed plan decodes with no join and no
+    * broadcast exchange. */
+  private def assertNoJoin(view: DataFrame): Unit = {
+    val plan = view.queryExecution.executedPlan
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"join in\n$plan")
+    assert(collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
+      s"broadcast exchange in\n$plan")
+  }
 
   private def workDir(tag: String) = Files.createTempDirectory(s"graft-decode-$tag").toString
 
@@ -53,9 +66,10 @@ class DecodeViewSpec extends AnyFunSuite {
     val p = new Pipeline(spark, workDir("adversarial"), nBuckets = 4)
     p.run(docs)
     val driver = p.materialized()
-    val dist   = p.decoded(driverThreshold = 0)
+    val dist   = p.decoded(driverThreshold = 0)._1
     assert(driverCatalog(driver) && !driverCatalog(dist))
     assert(rows(driver) == rows(dist))
+    assertNoJoin(driver)
     val want = facts.map { case (_, s, r, o) => (s.replace('_', ' '), r, o.replace('_', ' ')) }.sorted
     assert(spo(driver) == want)
   }
@@ -74,6 +88,31 @@ class DecodeViewSpec extends AnyFunSuite {
     assert(spo(view) == oracle(docs))
   }
 
+  test("decode: sparse catalog ids and an orphan triple decode alike in both regimes") {
+    // a hand-written workDir: catalog ids far from 1..n, two aliases of one
+    // entity, and a triple whose object id is in no catalog row
+    val dir = workDir("sparse")
+    val catalog = Seq(("a", "A", 7L), ("a2", "A", 7L), ("b", "B", 1000003L),
+      ("c", "C", Long.MaxValue), ("d", "D", -5L))
+    spark.createDataFrame(catalog).toDF("alias", "canonical", "entity_id")
+      .write.parquet(s"$dir/alias_map")
+    Manifest.write(s"$dir/alias_map", StageManifest("alias_map", "hand-written",
+      totalRows = catalog.size, globalChecksum = 0L, partitions = Nil, complete = true))
+    val facts = Seq(("d0", 0, 7L, "r", 1000003L, 0), ("d1", 1, Long.MaxValue, "r", -5L, 1),
+      ("d2", 2, -5L, "s", 7L, 1), ("d3", 3, 7L, "s", 8L, 2))
+    spark.createDataFrame(facts)
+      .toDF("src_doc", "src_span", "subj_id", "pred", "obj_id", "bucket")
+      .write.partitionBy("bucket").parquet(s"$dir/triples")
+    val p      = new Pipeline(spark, dir, nBuckets = 4)
+    val driver = p.materialized()
+    val dist   = p.decoded(driverThreshold = 0)._1
+    assert(driverCatalog(driver) && !driverCatalog(dist))
+    val want = Seq(("A", "r", "B", "d0", 0, 0), ("C", "r", "D", "d1", 1, 1),
+      ("D", "s", "A", "d2", 2, 1))
+    assert(rows(driver) == want)
+    assert(rows(dist) == want)
+  }
+
   test("memo: triples() follows a re-run on other docs; a resumed workDir decodes the same") {
     val docsA = Corpus.generate(spark, 300, 40)
     val docsB = Corpus.generate(spark, 250, 70, seed = 9L)
@@ -85,13 +124,18 @@ class DecodeViewSpec extends AnyFunSuite {
     assert(p.runsExecuted.count(_ == "triples") == 2)
     val graphB = spo(p.triples())
     assert(graphB == oracle(docsB))
+    // a resumed re-run drops the memo; a view taken before it still collects
+    val before = p.materialized()
+    p.run(docsB, inputFp = Some("memo:b"))
+    assert(p.materialized() ne before)
+    assert(spo(before) == graphB)
     val resumed = new Pipeline(spark, dir, nBuckets = 4)
     resumed.run(docsB, inputFp = Some("memo:b"))
     assert(resumed.runsExecuted.isEmpty)
     assert(spo(resumed.triples()) == graphB)
   }
 
-  test("job budget: a second triples() starts no job; a subject-bound lookup collects in at most 4") {
+  test("job budget: a second triples() starts no job; a subject-bound lookup collects in at most 2") {
     val docs = Corpus.generate(spark, 300, 40)
     val p    = new Pipeline(spark, workDir("jobs"), nBuckets = 4)
     p.run(docs)
@@ -103,7 +147,7 @@ class DecodeViewSpec extends AnyFunSuite {
       QueryBuilder.selectDistinct(p.triples(), Seq(Var("o")),
         Seq(Atom(Const(subj), Const(rel), Var("o")))).collect()
     }
-    assert(queryJobs <= 4, s"$queryJobs jobs")
+    assert(queryJobs <= 2, s"$queryJobs jobs")
     val want = oracle(docs).collect { case (`subj`, `rel`, o) => o }.toSet
     assert(want.nonEmpty && answer.map(_.getString(0)).toSet == want)
   }
