@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One place for the engine's Spark tuning: AQE on (runtime re-plan +
   * skew-join splitting, the north rule's skew story), shuffle partitions
   * sized to the core count (not the 200 default), UTC, no UI, whole-stage
-  * code compiled once per JVM (see [[CodegenCacheEntries]]) and Tungsten
-  * pages sized for small plans (see [[PageSize]]). */
+  * code compiled once per JVM (see [[CodegenCacheEntries]]), Tungsten
+  * pages sized for small plans (see [[PageSize]]) and a local file system
+  * that forks no process (see [[LocalFileSystem]]). */
 object Sessions {
   /** Compiled-class cache size (`spark.sql.codegen.cache.maxEntries`).
     *
@@ -47,12 +48,22 @@ object Sessions {
     * own. */
   val PageSize = "1m"
 
+  /** The `file:` file system (`fs.file.impl`): [[graft.io.LocalFs]].
+    * Without the native Hadoop library, the stock local file system forks
+    * a `chmod` for every file, `.crc` file and directory it creates; one
+    * `Pipeline.run` of perfbench's `build` corpus (20k docs, 32 buckets)
+    * forked 131 of them, 97 one after another in the single `triples`
+    * write task. `LocalFs` sets the same modes by system call. Hadoop
+    * caches a file system per scheme and user, so this holds only if no
+    * code creates a `file:` file system before the session does. */
+  val LocalFileSystem: String = classOf[graft.io.LocalFs].getName
+
   def local(cores: Int, appName: String = "graft"): SparkSession =
     tune(SparkSession.builder().master(s"local[$cores]"), cores, appName)
       .getOrCreate()
 
-  def tune(b: SparkSession.Builder, cores: Int, appName: String): SparkSession.Builder =
-    b.appName(appName)
+  def tune(b: SparkSession.Builder, cores: Int, appName: String): SparkSession.Builder = {
+    val tuned = b.appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -72,9 +83,12 @@ object Sessions {
       .config("spark.sql.maxConcurrentOutputFileWriters", "0")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
-      // shuffle/spill on tmpfs when present — a single local disk does not
-      // scale with task slots the way per-executor disks do on a cluster
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir"))
+      .config("spark.hadoop.fs.file.impl", LocalFileSystem)
+    // shuffle/spill on tmpfs when present — a single local disk does not
+    // scale with task slots the way per-executor disks do on a cluster;
+    // without it Spark uses java.io.tmpdir
+    if (new java.io.File("/dev/shm").isDirectory)
+      tuned.config("spark.local.dir", "/dev/shm/graft-spark-local")
+    else tuned
+  }
 }

@@ -48,17 +48,23 @@ object Manifest {
    * ONLY, no data read. This is the Iceberg-manifest discipline (per-file
    * record_count/file_size) and the only viable option when a stage
    * output is petabytes. File order is path-sorted → deterministic ids.
+   *
+   * The stage is listed by a recursive `listStatus` walk: a plain
+   * `FileStatus` carries path and length without loading permissions,
+   * where `listFiles` builds a `LocatedFileStatus` that copies them, and
+   * the local file system without the native Hadoop library loads them
+   * by forking `ls -ld` once per file and directory.
    */
   def footerStats(dir: String, hadoopConf: org.apache.hadoop.conf.Configuration): Seq[PartitionStat] = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileStatus, Path}
     val p  = new Path(dir)
     val fs = p.getFileSystem(hadoopConf)
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.LocatedFileStatus]()
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) files += f
+    def parquet(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { f =>
+      if (f.isDirectory) parquet(f.getPath)
+      else if (f.getPath.getName.endsWith(".parquet")) Seq(f)
+      else Nil
     }
+    val files = parquet(p)
     // footer reads are tiny metadata IOs but there can be hundreds of
     // files (buckets × tasks) — read them concurrently, keep path-sorted
     // deterministic ids (serial reads made the manifest pass scale

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 class FixedConfigSpec extends AnyFunSuite {
   private val root  = Paths.get("src/main/scala/graft")
   private val tools = root.resolve("tools")
-  private val envRead = """sys\.env|System\.getenv|sys\.props""".r
+  private val envRead = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
 
   private def engineFiles: Seq[Path] = {
     val s = Files.walk(root)
